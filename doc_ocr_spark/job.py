@@ -23,9 +23,12 @@ Partitioning / resume protocol (SURVEY.md §3.5):
   ``<output>/_lineage``.  Lineage costs NO second data pass (round-1
   re-read the whole written output — a full extra scan at the design
   point): doc_count comes from the parquet FOOTERS of exactly the
-  files this run added (metadata-only reads, distributed), bytes_out
-  from their on-disk sizes, and run totals (docs, bytes_in, text
-  bytes) ride the write itself via ``Observation``
+  files this run added (metadata-only reads by a small driver thread
+  pool — at most ``n_buckets`` files per run), bytes_out from their
+  on-disk sizes, and run totals (docs, bytes_in, text bytes) ride the
+  write itself via ``Observation``.  After the data write the job runs
+  no Spark job besides the one-file lineage append: the data files are
+  listed by a single ``globStatus`` of ``part_bucket=*/*.parquet``
 - ``--resume`` anti-joins pending buckets against committed lineage and
   processes only the remainder — a failed run never recomputes finished
   buckets
@@ -41,6 +44,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -65,23 +69,24 @@ def completed_buckets(spark: SparkSession, output: str) -> list[int]:
 
 def _list_data_files(spark: SparkSession, output: str) -> dict[str, int]:
     """{file path -> size} for committed data files under ``output``
-    (any Hadoop-supported filesystem; skips _lineage and non-parquet).
-    One recursive listing — the same metadata walk every commit
-    protocol performs; an Iceberg catalog would serve it from
+    (any Hadoop-supported filesystem).  One ``globStatus`` of
+    ``part_bucket=*/*.parquet``: the committed layout is exactly one
+    directory level deep, so _lineage, _SUCCESS, .crc checksums and
+    in-flight _temporary / .spark-staging trees never match (and the
+    names Spark's reader skips, leading ``_`` or ``.``, are dropped).
+    Glob metacharacters in ``output`` itself are escaped, so they match
+    literally.  An Iceberg catalog would serve the same list from
     manifests."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(output)
-    fs = path.getFileSystem(conf)
-    if not fs.exists(path):
-        return {}
+    literal = re.sub(r"([\\\[\]{}*?])", r"\\\1", output)
+    pattern = jvm.org.apache.hadoop.fs.Path(literal, "part_bucket=*/*.parquet")
+    statuses = pattern.getFileSystem(conf).globStatus(pattern)
     out: dict[str, int] = {}
-    it = fs.listFiles(path, True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath().toString()
-        if p.endswith(".parquet") and "/_lineage/" not in p and "part_bucket=" in p:
-            out[p] = int(st.getLen())
+    for st in statuses or []:
+        path = st.getPath()
+        if not path.getName().startswith(("_", ".")):
+            out[path.toString()] = int(st.getLen())
     return out
 
 
@@ -90,52 +95,58 @@ def _bucket_of(path: str) -> int:
     return int(seg.split("=", 1)[1])
 
 
+def _num_rows(p: str) -> int:
+    """Row count of one parquet file from its footer alone."""
+    import pyarrow.parquet as pq
+
+    if p.startswith("file:"):
+        return pq.ParquetFile(p[5:]).metadata.num_rows
+    if "://" in p:
+        # non-local output (hdfs/s3a/...): resolve through
+        # pyarrow's filesystem layer — still a footer-only read
+        from pyarrow import fs as pafs
+
+        filesystem, path = pafs.FileSystem.from_uri(p)
+        with filesystem.open_input_file(path) as f:
+            return pq.ParquetFile(f).metadata.num_rows
+    return pq.ParquetFile(p).metadata.num_rows
+
+
+_FOOTER_THREADS = 8
+
+
 def _lineage_from_files(
     spark: SparkSession, new_files: dict[str, int]
 ) -> DataFrame:
     """Per-bucket (doc_count, bytes_out) from file METADATA only:
-    row counts from parquet footers (a few KB per file, read
-    distributed via mapInPandas), bytes from the listing.  Never
-    touches row data."""
+    row counts from parquet footers (a few KB per file, read in the
+    driver by a small thread pool), bytes from the listing.  Never
+    touches row data.  The driver-side reads stay few at any corpus
+    size: the default post-kernel exchange puts each bucket in one
+    write task, so a run adds at most ``n_buckets`` files.  Returns one
+    local row per bucket, built from pandas so that it reaches the JVM
+    as an Arrow-backed local relation (a list of tuples would go
+    through a Python worker)."""
+    from concurrent.futures import ThreadPoolExecutor
+
     import pandas as pd
 
-    rows = [(p, sz, _bucket_of(p)) for p, sz in sorted(new_files.items())]
-    fdf = spark.createDataFrame(rows, "path string, fsize long, part_bucket int")
-
-    def _footer_counts(batches):
-        import pyarrow.parquet as pq
-
-        def _num_rows(p: str) -> int:
-            if p.startswith("file:"):
-                return pq.ParquetFile(p[5:]).metadata.num_rows
-            if "://" in p:
-                # non-local output (hdfs/s3a/...): resolve through
-                # pyarrow's filesystem layer — still a footer-only read
-                from pyarrow import fs as pafs
-
-                filesystem, path = pafs.FileSystem.from_uri(p)
-                with filesystem.open_input_file(path) as f:
-                    return pq.ParquetFile(f).metadata.num_rows
-            return pq.ParquetFile(p).metadata.num_rows
-
-        for pdf in batches:
-            out = []
-            for p, sz, b in zip(pdf["path"], pdf["fsize"], pdf["part_bucket"]):
-                out.append(
-                    {
-                        "part_bucket": int(b),
-                        "doc_count": int(_num_rows(p)),
-                        "bytes_out": int(sz),
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    counted = fdf.mapInPandas(
-        _footer_counts, "part_bucket int, doc_count long, bytes_out long"
+    paths = sorted(new_files)
+    with ThreadPoolExecutor(min(_FOOTER_THREADS, len(paths))) as pool:
+        counts = list(pool.map(_num_rows, paths))
+    per_file = pd.DataFrame(
+        {
+            "part_bucket": [_bucket_of(p) for p in paths],
+            "doc_count": counts,
+            "bytes_out": [new_files[p] for p in paths],
+        }
     )
-    return counted.groupBy("part_bucket").agg(
-        F.sum("doc_count").alias("doc_count"),
-        F.sum("bytes_out").alias("bytes_out"),
+    per_bucket = per_file.groupby("part_bucket", as_index=False).sum()
+    per_bucket = per_bucket.astype(
+        {"part_bucket": "int32", "doc_count": "int64", "bytes_out": "int64"}
+    )
+    return spark.createDataFrame(
+        per_bucket, "part_bucket int, doc_count long, bytes_out long"
     )
 
 
@@ -207,13 +218,13 @@ def run_extraction(
         corpus = spark.read.parquet(input_path)
     corpus = with_bucket(corpus.select("url", "html"), n_buckets)
 
-    if not resume and completed_buckets(spark, output):
+    done = set(completed_buckets(spark, output))
+    if done and not resume:
         # the output append would silently duplicate finished buckets
         raise ValueError(
             f"{output} already has committed lineage; pass --resume to "
             "process only pending buckets (or use a fresh output path)"
         )
-    done = set(completed_buckets(spark, output)) if resume else set()
     if done:
         corpus = corpus.filter(~F.col("part_bucket").isin([int(b) for b in done]))
 
@@ -288,7 +299,9 @@ def run_extraction(
             # selecting bytes_in would get nondeterministic resolution
             .withColumn("bytes_in", F.lit(None).cast("long"))
         )
-        lineage.write.mode("append").parquet(lineage_path(output))
+        # one lineage file per run (the local relation would write one
+        # per core)
+        lineage.coalesce(1).write.mode("append").parquet(lineage_path(output))
     return {
         "docs": metrics["docs"] or 0,
         "bytes": metrics["bytes_in"] or 0,

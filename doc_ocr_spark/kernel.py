@@ -136,9 +136,13 @@ def apply_kernel(
     row group, serializing extraction on one of 32 cores (measured:
     the sf1.0 bench corpus is a single 3.8 MB row group).  The
     condition-gated respread round-robins the raw rows up to the
-    session parallelism when the scan is split-starved (a structural
-    no-op at corpus scale, where splits >> cores); the 1 MB floor keeps
-    truly tiny corpora on the scan layout.  Kernel output is per-row,
+    session parallelism when the scan is split-starved — fewer scan
+    splits OR fewer parquet row groups than cores, since a split
+    without a row group reads nothing (a 4000-page file of two row
+    groups cut into four byte splits ran two busy tasks on four
+    slots).  It is a structural no-op at corpus scale, where splits and
+    row groups >> cores; the 1 MB floor keeps truly tiny corpora on the
+    scan layout.  Kernel output is per-row,
     so results are byte-identical at any parallelism (the golden
     identity tests pin this).  Streaming inputs keep their layout
     (micro-batch DFs report no input files, so the floor returns them

@@ -46,28 +46,90 @@ def respread(df: DataFrame, min_bytes: int = 0) -> DataFrame:
     52 MB 7.4 -> 4.5 s better — finding #36).  Ops pass the floor
     their own A/B justifies; default 0 keeps the hash-heavy text ops
     unconditional below the parallelism test.
+
+    Starvation counts the splits that hold work:
+    ``min(scan splits, row groups in the input footers) < parallelism``.
+    A parquet row group is read whole by the one split holding its
+    midpoint, so a file with fewer row groups than cores starves the
+    stage however many byte splits Spark cuts it into (a 26 MB file of
+    two row groups: four splits, two busy).  Footers are read only
+    until the count reaches the parallelism, where the rule can no
+    longer fire — at most ``par`` footer reads on any corpus.  Input
+    that is not parquet has no row groups to count and keeps the split
+    test alone.  The input must be a scan (plus narrow projections and
+    filters): after an exchange the partitions no longer map to row
+    groups.
+
+    Sizes and footers resolve through the Hadoop FileSystem of each
+    input URI — the one Spark read the scan through — so remote inputs
+    (hdfs, s3a, ...) get the same decision as local ones.
     """
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
+    files = df.inputFiles()
     if min_bytes:
-        import os as _os
+        from py4j.protocol import Py4JJavaError
 
         try:
-            size = sum(
-                _os.path.getsize(f.removeprefix("file:")) for f in df.inputFiles()
-            )
-        except OSError:
-            # unknown-size source (remote URI the local stat cannot
-            # resolve): when a floor was requested, DON'T respread —
-            # falling through to the split test would land tiny remote
-            # inputs in exactly the measured-regression regime the
+            size = _input_bytes(spark, files, min_bytes)
+        except Py4JJavaError:
+            # unknown-size source: when a floor was requested, DON'T
+            # respread — falling through to the split test would land
+            # tiny inputs in exactly the measured-regression regime the
             # floor exists to avoid (ADVICE r05)
             return df
         if size < min_bytes:
             return df
-    if df.rdd.getNumPartitions() < par:
+    if df.rdd.getNumPartitions() < par or _row_groups(spark, files, par) < par:
         return df.repartition(par)
     return df
+
+
+def _hadoop_statuses(spark: SparkSession, files: list[str]):
+    """Hadoop ``FileStatus`` of each input URI, lazily."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    for f in files:
+        path = jvm.org.apache.hadoop.fs.Path(f)
+        yield path.getFileSystem(conf).getFileStatus(path)
+
+
+def _input_bytes(spark: SparkSession, files: list[str], enough: int) -> int:
+    """Summed size of ``files``; stops once it reaches ``enough``."""
+    size = 0
+    for st in _hadoop_statuses(spark, files):
+        size += st.getLen()
+        if size >= enough:
+            break
+    return size
+
+
+def _row_groups(spark: SparkSession, files: list[str], enough: int) -> int:
+    """Parquet row groups over ``files``, counted from their footers
+    until the count reaches ``enough``; ``enough`` when the footers
+    cannot be read (not parquet) or there are none (in-memory input),
+    so the row-group rule stays out."""
+    from py4j.protocol import Py4JJavaError
+
+    if not files:
+        return enough
+    hadoop = spark._jvm.org.apache.parquet.hadoop
+    conf = spark._jsc.hadoopConfiguration()
+    n = 0
+    try:
+        for st in _hadoop_statuses(spark, files):
+            if n >= enough:
+                break
+            reader = hadoop.ParquetFileReader.open(
+                hadoop.util.HadoopInputFile.fromStatus(st, conf)
+            )
+            try:
+                n += reader.getRowGroups().size()
+            finally:
+                reader.close()
+    except Py4JJavaError:
+        return enough
+    return n
 
 
 def scaled_long(c: Column, scale: float) -> Column:

@@ -328,8 +328,9 @@ def test_tfidf_two_scans_no_join_on_term(spark):
 def test_respread_gating(spark, tmp_path):
     """respread must (a) round-robin a split-starved scan up to the
     session parallelism, (b) be an identity when the scan already
-    provides enough partitions, and (c) respect the min_bytes floor
-    for compute-light inputs."""
+    provides enough partitions, (c) respect the min_bytes floor
+    for compute-light inputs, and (d) count as starved a scan whose
+    byte splits outnumber the cores but whose row groups do not."""
     from doc_ocr_spark.operators import respread
 
     p = str(tmp_path / "t.parquet")
@@ -348,3 +349,63 @@ def test_respread_gating(spark, tmp_path):
     # already-parallel input is untouched
     wide = one.repartition(par + 4)
     assert respread(wide) is wide
+
+    # row-group starvation: a file of two row groups that Spark still
+    # cuts into >= par byte splits has only two splits holding work
+    rg2 = _random_pages_parquet(tmp_path / "rg2.parquet", n_row_groups=2)
+    cut = spark.read.parquet(rg2)
+    assert cut.rdd.getNumPartitions() >= par
+    spread = respread(cut)
+    assert spread.rdd.getNumPartitions() == par
+    assert "RoundRobinPartitioning" in spread._jdf.queryExecution().toString()
+
+    # the same bytes in >= par row groups already keep every slot busy
+    rgpar = _random_pages_parquet(tmp_path / "rgpar.parquet", n_row_groups=par)
+    busy = spark.read.parquet(rgpar)
+    assert busy.rdd.getNumPartitions() >= par
+    assert respread(busy) is busy
+
+
+def _random_pages_parquet(path, n_row_groups: int, mb: int = 20) -> str:
+    """One uncompressed parquet file of ``mb`` MB of incompressible
+    payload in ``n_row_groups`` equal row groups (~20 MB is what the
+    16m maxPartitionBytes session cuts into >= 4 byte splits)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows, size = 2000, mb << 20
+    blob = os.urandom(size // rows)
+    table = pa.table(
+        {
+            "url": [f"https://rg.test/{i}" for i in range(rows)],
+            "html": [blob] * rows,
+        }
+    )
+    pq.write_table(
+        table,
+        str(path),
+        row_group_size=rows // n_row_groups,
+        compression="none",
+        use_dictionary=False,
+    )
+    assert pq.ParquetFile(str(path)).metadata.num_row_groups == n_row_groups
+    return str(path)
+
+
+def test_respread_floor_sized_without_local_stat(spark, tmp_path, monkeypatch):
+    """The min_bytes floor is sized through the filesystem of the input
+    URI, not a local ``os.path.getsize``: an input whose size the local
+    stat cannot resolve (a remote URI) still respreads when starved and
+    above the floor."""
+    from doc_ocr_spark.operators import respread
+
+    src = _random_pages_parquet(tmp_path / "remote.parquet", n_row_groups=1, mb=2)
+
+    def _no_local_stat(path):
+        raise OSError(f"no local stat for {path}")
+
+    monkeypatch.setattr(os.path, "getsize", _no_local_stat)
+    starved = spark.read.parquet(src)
+    spread = respread(starved, min_bytes=1 << 20)
+    assert "RoundRobinPartitioning" in spread._jdf.queryExecution().toString()
+    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism

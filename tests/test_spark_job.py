@@ -55,12 +55,57 @@ def test_job_end_to_end_with_lineage(spark, corpus_path, tmp_path):
     assert compare_to_golden(_rows(result.drop("part_bucket", "bytes_in", "extractor_version")), golden_rows(N_DOCS)) == []
 
 
+def _on_disk(out):
+    """{bucket -> (rows, bytes)} of the committed data files, read
+    straight off the filesystem."""
+    import pyarrow.parquet as pq
+
+    found = {}
+    for d in os.listdir(out):
+        if not d.startswith("part_bucket="):
+            continue
+        b = int(d.split("=", 1)[1])
+        for f in os.listdir(os.path.join(out, d)):
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                p = os.path.join(out, d, f)
+                rows, size = found.get(b, (0, 0))
+                found[b] = (
+                    rows + pq.ParquetFile(p).metadata.num_rows,
+                    size + os.path.getsize(p),
+                )
+    return found
+
+
+def _drop_lineage_of_odd_buckets(out):
+    """The "died between data commit and lineage append" window for
+    half the buckets: data files stay, their lineage rows go."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from doc_ocr_spark.job import lineage_path
+
+    lin = lineage_path(out)
+    table = pq.read_table(lin)
+    even = table.filter(
+        pc.equal(pc.bit_wise_and(table.column("part_bucket"), pa.scalar(1, pa.int32())), 0)
+    )
+    shutil.rmtree(lin)
+    os.makedirs(lin)
+    pq.write_table(even, os.path.join(lin, "part-00000-crash.parquet"))
+
+
 def test_lineage_costs_no_output_data_read(spark, corpus_path, tmp_path, monkeypatch):
     """Round-1 regression guard: lineage must come from file METADATA
     (footers + listing) and Observation, never from re-reading the
     written output — at the design point that re-read was a second full
     pass over the extracted corpus.  Intercepts DataFrameReader.parquet
-    and fails if the output path is ever loaded during the job."""
+    and fails if the output path is ever loaded during the job — the
+    first run and a resume after a crash that lost half the lineage —
+    and checks that each bucket's lineage row matches its files on
+    disk (rows and bytes)."""
     from pyspark.sql.readwriter import DataFrameReader
 
     out = str(tmp_path / "out_noreread")
@@ -71,27 +116,70 @@ def test_lineage_costs_no_output_data_read(spark, corpus_path, tmp_path, monkeyp
         read_paths.extend(paths)
         return real_parquet(self, *paths, **opts)
 
+    def lineage_matches_disk():
+        offenders = [
+            p for p in read_paths
+            if p.startswith(out) and not p.startswith(os.path.join(out, "_lineage"))
+        ]
+        assert offenders == [], f"job re-read its own output: {offenders}"
+        lin = spark.read.parquet(os.path.join(out, "_lineage")).collect()
+        assert len(lin) == len({r.part_bucket for r in lin})  # one row per bucket
+        assert sum(r.doc_count for r in lin) == N_DOCS
+        assert all(r.bytes_out > 0 for r in lin)
+        per_bucket = {r.part_bucket: (r.doc_count, r.bytes_out) for r in lin}
+        assert per_bucket == _on_disk(out)
+        actual = {
+            r.part_bucket: r.n
+            for r in real_parquet(spark.read, out)
+            .groupBy("part_bucket").agg(F.count("*").alias("n")).collect()
+        }
+        assert {b: n for b, (n, _) in per_bucket.items()} == actual
+
     monkeypatch.setattr(DataFrameReader, "parquet", spy)
     m = run_extraction(spark, corpus_path, out, n_buckets=8)
     assert m["docs"] == N_DOCS
-    offenders = [
-        p for p in read_paths
-        if p.startswith(out) and not p.startswith(os.path.join(out, "_lineage"))
-    ]
-    assert offenders == [], f"job re-read its own output: {offenders}"
-    # and the metadata-derived lineage is still exact
-    lin = spark.read.parquet(os.path.join(out, "_lineage"))
-    assert lin.agg(F.sum("doc_count")).collect()[0][0] == N_DOCS
-    assert lin.filter(F.col("bytes_out") <= 0).count() == 0
-    per_bucket = {
-        r.part_bucket: r.doc_count for r in lin.collect()
+    lineage_matches_disk()
+
+    _drop_lineage_of_odd_buckets(out)
+    read_paths.clear()
+    m = run_extraction(spark, corpus_path, out, n_buckets=8, resume=True)
+    assert m["resumed"] is True
+    assert 0 < m["docs"] < N_DOCS
+    lineage_matches_disk()
+
+
+def test_list_data_files_globs_committed_layout(spark, tmp_path):
+    """The one-glob listing returns {} for an absent output and only the
+    committed ``part_bucket=*/*.parquet`` files otherwise: never
+    _lineage, .crc checksums, _SUCCESS or an in-flight _temporary
+    tree.  Glob metacharacters in the output path match literally."""
+    from doc_ocr_spark.job import _list_data_files
+
+    out = tmp_path / "listed[v1]{a,b}"
+    assert _list_data_files(spark, str(out)) == {}
+
+    def put(rel, n):
+        p = out / rel
+        p.parent.mkdir(parents=True, exist_ok=True)
+        p.write_bytes(b"x" * n)
+        return p
+
+    want = {
+        put("part_bucket=0/part-00000-a.c000.snappy.parquet", 11),
+        put("part_bucket=0/part-00001-a.c000.snappy.parquet", 12),
+        put("part_bucket=7/part-00002-a.c000.snappy.parquet", 13),
     }
-    actual = {
-        r.part_bucket: r.n
-        for r in spark.read.parquet(out)
-        .groupBy("part_bucket").agg(F.count("*").alias("n")).collect()
-    }
-    assert per_bucket == actual
+    put("part_bucket=0/.part-00000-a.c000.snappy.parquet.crc", 5)
+    put("part_bucket=7/_part-00002-a.c000.snappy.parquet", 5)
+    put("_SUCCESS", 0)
+    put("_lineage/part-00000-l.snappy.parquet", 5)
+    put("_lineage/part_bucket=1/part-00000-l.snappy.parquet", 5)
+    put("_temporary/0/task/part_bucket=3/part-00003-t.snappy.parquet", 5)
+    put("part_bucket=4/_temporary/part-00004-t.snappy.parquet", 5)
+
+    listed = _list_data_files(spark, str(out))
+    assert {p.removeprefix("file:") for p in listed} == {str(p) for p in want}
+    assert sorted(listed.values()) == [11, 12, 13]
 
 
 def test_job_resume_skips_completed_buckets(spark, corpus_path, tmp_path):
