@@ -535,10 +535,10 @@ def propagate_min_labels(
     rounds — so simple propagation is the default.  The adversarial
     chain fixture (tests/test_dedup_ops.py) measures ~100% of a
     high-diameter graph's cost as round count x fixed per-round
-    overhead, so ``doubling=True`` (env ``SPARK_GRAFT_CC_DOUBLING=1``)
-    adds a pointer-jumping shortcut — label(d) = min(label(d),
-    label(label(d))), one extra self-join per round — collapsing the
-    round count from O(diameter) to O(log diameter).  Keep it OFF for
+    overhead, so ``doubling=True`` adds a pointer-jumping shortcut —
+    label(d) = min(label(d), label(label(d))), one extra self-join per
+    round — collapsing the round count from O(diameter) to
+    O(log diameter).  Keep it OFF for
     clique-shaped dedup graphs: at diameter 1-2 both variants take 2-3
     rounds and the shortcut join is pure overhead (measured in the
     fixture; BENCH/BASELINE.md finding #24).  The default
@@ -561,8 +561,6 @@ def propagate_min_labels(
     rounds' checkpoint blocks are dereferenced each iteration and freed
     by the context cleaner.
     """
-    import os
-
     from pyspark.sql import Observation
 
     # doubling: True = shortcut from round 0, False = never, None =
@@ -570,18 +568,11 @@ def propagate_min_labels(
     # graphs real near-dup corpora produce), switch the shortcut on if
     # convergence drags past _ADAPT_AFTER rounds (evidently a
     # high-diameter component; from there rounds double their reach, so
-    # any diameter fits the budget).  SPARK_GRAFT_CC_DOUBLING=1/0
-    # forces always/never.
+    # any diameter fits the budget).
     adapt_after: int | None = None
     if doubling is None:
-        env = os.environ.get("SPARK_GRAFT_CC_DOUBLING", "")
-        if env == "1":
-            doubling = True
-        elif env == "0":
-            doubling = False
-        else:
-            doubling = False
-            adapt_after = _ADAPT_AFTER
+        doubling = False
+        adapt_after = _ADAPT_AFTER
     # undirected edge list, cached: every iteration joins against it
     edges = (
         pairs.select("doc_a", "doc_b")

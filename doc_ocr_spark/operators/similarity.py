@@ -4,25 +4,20 @@ Parity discipline: dot products are summed as scaled longs
 (``floor(p * 1e12)`` per element product — exact, order-independent,
 and on codegen's primitive fast path; see operators/__init__.py for why
 not DECIMAL), so Spark and DuckDB agree bit-for-bit before the final
-6-dp rounding (error bound 64e-12 << 1e-6).  The Spark side uses only
-built-in expressions — no Python.
+6-dp rounding (error bound 64e-12 << 1e-6).
 
-Plan shape (round-2 rework, VERDICT r01 item 4) — MEASURED hybrid:
+Plan shape:
 
-- Norms, hyperplane bucket bits, and k-means assignment dots are
-  computed IN-ROW with ``aggregate(zip_with(...))``.  That deletes a
-  shuffle each: norms were explode -> groupBy -> JOIN back; buckets
-  were explode -> groupBy; k-means assignment was an equi-join on the
-  dimension index — 64 distinct join keys, a guaranteed hot-key skew
-  at corpus scale — and is now a broadcast nested loop over the k
-  centroid arrays (map-only, the classic k-means-on-MapReduce shape).
-- The BIG within-bucket pair joins keep the explode + partial-agg dot.
-  Head-to-head at sf0.1 (200k pairs, one session, local[32]): explode
-  +0.7s over the join baseline vs zip_with +1.35s — Spark's
-  higher-order array functions evaluate interpreted lambdas OUTSIDE
-  whole-stage codegen, and that costs more than the transient 64x row
-  inflation, which never reaches a shuffle (map-side combine emits one
-  row per pair).  Shuffle volume is identical either way.
+- Norms and k-means assignment dots are computed IN-ROW with
+  ``aggregate(zip_with(...))``.  That deletes a shuffle each: norms
+  were explode -> groupBy -> JOIN back; k-means assignment was an
+  equi-join on the dimension index — 64 distinct join keys, a
+  guaranteed hot-key skew at corpus scale — and is now a broadcast
+  nested loop over the k centroid arrays (map-only, the classic
+  k-means-on-MapReduce shape).
+- The BIG within-bucket pair work (``ann_nn_within_bucket``,
+  ``embedding_cosine_dedup``) runs in grouped NumPy kernels that return
+  shortlists with EXACT scaled-long dots (see the kernel headers).
 
 - ``ann_cosine_topk``   brute-force cosine top-k (the correctness
   baseline; O(q x n), broadcast the query set)
@@ -100,38 +95,6 @@ def _emb_with_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, embedding, nrm) — norms map-side, no shuffle."""
     return load(spark, sf_dir, "embeddings").withColumn(
         "nrm", _norm_expr(F.col("embedding"))
-    )
-
-
-def _pair_sims(pairs: DataFrame, extra_keys: list[str]) -> DataFrame:
-    """Cosine sim for an already-joined pair set via explode + partial
-    agg — the measured-fastest JVM form (round-6 microbench over 1e7
-    pairs: this 2.6 s, in-row zip_with 3.5 s, a 64-term unrolled
-    codegen sum 44.6 s — the last blows the JIT method-size limit and
-    the stage runs interpreted).  Expects columns qid/cid/qe/ce/qn/cn
-    (+extra_keys); returns qid, cid, extra_keys..., sim."""
-    dots = (
-        pairs.select(
-            "qid", "cid", "qn", "cn", *extra_keys,
-            F.explode(F.sequence(F.lit(1), F.lit(DIM))).alias("i"),
-            "qe", "ce",
-        )
-        .select(
-            "qid", "cid", "qn", "cn", *extra_keys,
-            scaled_long(
-                F.element_at("qe", F.col("i")).cast("double")
-                * F.element_at("ce", F.col("i")).cast("double"),
-                _S,
-            ).alias("p"),
-        )
-        .groupBy("qid", "cid", "qn", "cn", *extra_keys)
-        .agg(F.sum("p").alias("dot"))
-    )
-    return dots.select(
-        "qid", "cid", *extra_keys,
-        F.round(
-            (F.col("dot").cast("double") / _S) / (F.col("qn") * F.col("cn")), 6
-        ).alias("sim"),
     )
 
 
@@ -439,31 +402,28 @@ def _refined_ranked(
     )
 
 
-# Round 6 (guide §4.2, §8): the within-bucket NN pair work moves into a
-# cogrouped NumPy kernel by default.  The JVM pair-join form pays
-# ~8-10 us per candidate pair however the dot is expressed (explode /
-# zip_with / unrolled — microbenched, OPTIMIZATION_r06.md) because every
-# pair materializes a ~550-byte row carrying BOTH embeddings through the
-# join, the 64x explode and a pair-keyed aggregation; at sf1.0 that is
-# 1.6e8 pairs = ~1400 core-seconds.  The kernel instead ships each
-# bucket's vectors ONCE (5n small rows through one exchange — the §8
-# "move heavy bytes once" rule), forms the pair products inside NumPy,
-# and returns only a per-(query, bucket) SHORTLIST of nearest-neighbour
-# candidates with their EXACT scaled-long dots; the sim division,
-# 6-dp rounding and the global argmax stay in JVM expressions
-# bit-identical to the pair-join form.
+# The within-bucket NN pair work runs in a cogrouped NumPy kernel.  A
+# JVM pair join pays ~8-10 us per candidate pair (OPTIMIZATION_r06.md)
+# because every pair materializes a row carrying BOTH embeddings; the
+# kernel ships each bucket's vectors ONCE through one exchange, forms
+# the pair products inside NumPy, and returns only a per-(query,
+# bucket) SHORTLIST of nearest-neighbour candidates with their EXACT
+# scaled-long dots; the sim division, 6-dp rounding and the global
+# argmax stay in JVM expressions.
 #
 # Exactness: the kernel preselects by an approximate float64 GEMM sim
 # with margin _NN_MARGIN, then recomputes floor((x*y)*1e12) as int64
-# per element for the shortlist — identical IEEE ops in the identical
-# order as the JVM/DuckDB twins, so the returned dots are bit-exact.
-# The margin only has to cover (a) two exact sims rounding to the same
-# 6-dp value (<~2e-6 apart) and (b) GEMM-vs-exact drift (<~1e-9); 1e-4
-# is ~50x conservative, so the true argmax row is always shortlisted
-# and extra rows are inert under the total-ordered argmax.
-_NN_IMPL = _os.environ.get("SPARK_GRAFT_NN_IMPL", "cogroup")
+# per element for the shortlist — the same IEEE ops in the same order
+# as _dot_scaled and the DuckDB oracle, so the returned dots are
+# bit-exact.  The margin only has to cover (a) two exact sims rounding
+# to the same 6-dp value (<~2e-6 apart) and (b) GEMM-vs-exact drift
+# (<~1e-9); 1e-4 is ~50x conservative, so the true argmax row is always
+# shortlisted and extra rows are inert under the total-ordered argmax.
 _NN_MARGIN = 1e-4
-_NN_BLOCK = 4096  # probe rows per GEMM block (bounds kernel memory)
+# Cells per GEMM block in both kernels: rows are blocked so that each
+# float64 sims buffer holds max(_GEMM_CELLS, |bucket|) cells (128 MiB
+# up to 16M-vector buckets), not a fixed row count times |bucket|.
+_GEMM_CELLS = 1 << 24
 
 
 def _nn_shortlist_kernel(key, probe, index):
@@ -494,8 +454,9 @@ def _nn_shortlist_kernel(key, probe, index):
     qv = probe["vec_id"].to_numpy(dtype=np.int64)
     cv = index["vec_id"].to_numpy(dtype=np.int64)
     outs = []
-    for b0 in range(0, len(Q), _NN_BLOCK):
-        b1 = min(b0 + _NN_BLOCK, len(Q))
+    block = max(1, _GEMM_CELLS // len(C))
+    for b0 in range(0, len(Q), block):
+        b1 = min(b0 + block, len(Q))
         approx = (Q[b0:b1] @ C.T) / qn[b0:b1, None] / cn[None, :]
         approx[qv[b0:b1, None] == cv[None, :]] = -np.inf  # no self-pairs
         best = approx.max(axis=1)
@@ -504,7 +465,7 @@ def _nn_shortlist_kernel(key, probe, index):
         qi, ci = np.nonzero(keep)
         if len(qi) == 0:
             continue
-        # exact scaled-long dot, same op order as the JVM/DuckDB twins:
+        # exact scaled-long dot, same op order as _dot_scaled:
         # (float64(x) * float64(y)) * 1e12, floor, int64, sum
         prod = Q[b0 + qi] * C[ci]
         dot = np.floor(prod * _S).astype(np.int64).sum(axis=1)
@@ -529,7 +490,7 @@ def ann_nn_within_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup, the scale path end-to-end: IVF-assign every
     vector to a bucket (Lloyd-refined centroids by default, finding
     #32), then find each vector's nearest neighbour WITHIN its bucket
-    only.  At 100 TB the pair join is bounded by bucket size instead
+    only.  At 100 TB the pair work is bounded by bucket size instead
     of n^2 (the embedding analogue of LSH-banded MinHash in dedup.py)."""
     emb = _emb_with_norms(spark, sf_dir)
     index_rank = 1 if (IVF_PROBE_MODE == "asym" and N_PROBE > 1) else N_PROBE
@@ -569,95 +530,38 @@ def ann_nn_within_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign = _topp_assign(_sims(cents, emb), N_PROBE).select("vec_id", "bucket")
         withb = emb.join(assign, "vec_id")
         cand = withb
-    # Self-join via .alias(): in 'sym' mode BOTH sides are the
-    # *identical* subtree, so Spark's ReuseExchange runs the whole
-    # assignment computation (centroid sims + max_by agg) once and
-    # feeds both join inputs from the same shuffle output.  (The
-    # previous form renamed columns before the join, making the
-    # subtrees differ — the ~half-the-work assignment ran twice;
-    # measured ~25% wall saving at sf0.1.)  In 'asym' mode the sides
-    # genuinely differ; the centroid-sims leg is map-only (broadcast
-    # nested loop), so recomputing it costs no extra shuffle.
-    if _NN_IMPL == "cogroup":
-        # cogrouped NumPy kernel (see _nn_shortlist_kernel header):
-        # one exchange of the small (vec_id, bucket, embedding, nrm)
-        # rows per side, pair products formed inside NumPy, exact dots
-        # back out for a tiny shortlist.
-        pcols = ["vec_id", "bucket", "embedding", "nrm"]
-        # re-alias each side's columns (fresh exprIds) — withb and cand
-        # share lineage, and cogroup's column resolution rejects the
-        # ambiguous self-reference otherwise
-        probe_side = withb.select([F.col(c).alias(c) for c in pcols])
-        index_side = cand.select([F.col(c).alias(c) for c in pcols])
-        shortlist = (
-            probe_side.groupby("bucket")
-            .cogroup(index_side.groupby("bucket"))
-            .applyInPandas(
-                _nn_shortlist_kernel,
-                "qid long, bucket long, cid long, dot long, "
-                "qn double, cn double",
-            )
+    pcols = ["vec_id", "bucket", "embedding", "nrm"]
+    # re-alias each side's columns (fresh exprIds) — withb and cand
+    # share lineage, and cogroup's column resolution rejects the
+    # ambiguous self-reference otherwise
+    probe_side = withb.select([F.col(c).alias(c) for c in pcols])
+    index_side = cand.select([F.col(c).alias(c) for c in pcols])
+    shortlist = (
+        probe_side.groupby("bucket")
+        .cogroup(index_side.groupby("bucket"))
+        .applyInPandas(
+            _nn_shortlist_kernel,
+            "qid long, bucket long, cid long, dot long, "
+            "qn double, cn double",
         )
-        sims = shortlist.select(
-            "qid", "cid", "bucket",
-            F.round(
-                (F.col("dot").cast("double") / _S)
-                / (F.col("qn") * F.col("cn")),
-                6,
-            ).alias("sim"),
-        )
-    else:
-        # JVM pair-join fallback (SPARK_GRAFT_NN_IMPL=jvm), kept for
-        # A/B evidence.  Guide §2.5/§2.6: the pair join's probe side
-        # arrives in a handful of byte-sized AQE-coalesced partitions
-        # (measured at sf1.0: the join+dot stage ran 8 tasks on 32
-        # cores for ~1400 core-seconds — AQE sizes partitions by INPUT
-        # bytes and cannot see that each probe row fans out into
-        # ~|bucket| dot evaluations).  One round-robin exchange of the
-        # probe rows restores full parallelism for the dominant stage;
-        # values are unaffected (the final argmax has a total
-        # tie-break).
-        withb = withb.repartition(spark.sparkContext.defaultParallelism)
-        pairs = (
-            withb.alias("q")
-            .join(
-                cand.alias("c"),
-                (F.col("q.bucket") == F.col("c.bucket"))
-                & (F.col("q.vec_id") != F.col("c.vec_id")),
-            )
-            .select(
-                F.col("q.vec_id").alias("qid"),
-                F.col("c.vec_id").alias("cid"),
-                F.col("q.embedding").alias("qe"),
-                F.col("c.embedding").alias("ce"),
-                F.col("q.nrm").alias("qn"),
-                F.col("c.nrm").alias("cn"),
-                F.col("q.bucket").alias("bucket"),
-            )
-        )
-        sims = _pair_sims(pairs, ["bucket"])
-    # bucket as the FINAL tie-break: inert at nprobe=1 (a pair shares
-    # one bucket), and at nprobe>1 it pins which probed bucket the
-    # duplicate (qid,cid) row reports — same key order as the oracle.
-    if _os.environ.get("SPARK_GRAFT_NN_ARGMAX", "maxby") == "window":
-        nn_w = Window.partitionBy("qid").orderBy(
-            F.col("sim").desc(), F.col("cid").asc(), F.col("bucket").asc()
-        )
-        return (
-            sims.withColumn("rank", F.row_number().over(nn_w))
-            .filter(F.col("rank") == 1)
-            .select(
-                F.col("qid").alias("vec_id"), "bucket",
-                F.col("cid").alias("nn_id"), "sim",
-            )
-        )
-    # Round 6: the rank=1 window became a max_by AGGREGATION (same
-    # rewrite as _argmax_assign) — the window shuffled and sorted every
-    # pair sim (1.6e8 rows at sf1.0) where the agg's map-side partial
-    # combine ships ~one row per (task, qid).  The comparison key
-    # (sim, -cid, -bucket) is unique per qid (cid/bucket identify the
-    # pair), so the argmax is total and matches the oracle's
-    # ORDER BY sim DESC, cid, bucket exactly.
+    )
+    sims = shortlist.select(
+        "qid", "cid", "bucket",
+        F.round(
+            (F.col("dot").cast("double") / _S)
+            / (F.col("qn") * F.col("cn")),
+            6,
+        ).alias("sim"),
+    )
+    # Argmax as a max_by AGGREGATION (same form as _argmax_assign): its
+    # map-side partial combine ships ~one row per (task, qid), where a
+    # rank=1 window would shuffle and sort every shortlisted sim.  The
+    # comparison key (sim, -cid, -bucket) is unique per qid (cid/bucket
+    # identify the pair), so the argmax is total and matches the
+    # oracle's ORDER BY sim DESC, cid, bucket exactly.  bucket as the
+    # FINAL tie-break is inert at nprobe=1 (a pair shares one bucket);
+    # at nprobe>1 it pins which probed bucket the duplicate (qid, cid)
+    # row reports.
     return (
         sims.groupBy(F.col("qid").alias("vec_id"))
         .agg(
@@ -783,7 +687,7 @@ def _hyperplane_signs(n_planes: int, dim: int = DIM, seed: int = 20240816):
 
 
 # Plane count bounds bucket size: expected bucket ~ n / 2^planes, so
-# planes must grow ~log2(n) for the pair join to stay linear.  4 is
+# planes must grow ~log2(n) for the pair work to stay linear.  4 is
 # right for the driver's sf<=0.1 correctness corpora (500-2000
 # vectors); the sf1-equivalent bench (20k vectors) measured 72 s with
 # 4 planes (12.5M candidate pairs) vs 7 s with 9 (512 buckets; the
@@ -807,34 +711,18 @@ N_BANDS = int(_os.environ.get("SPARK_GRAFT_LSH_BANDS", "4"))
 _SIGNS = _hyperplane_signs(N_PLANES * N_BANDS)
 
 
-def _band_bucket_col(b: int):
-    """In-row bucket id of band ``b``: sign bits of its N_PLANES dots
-    (planes [b*N_PLANES, (b+1)*N_PLANES) of the shared signs table)."""
-    bucket = None
-    for i in range(N_PLANES):
-        signs_j = F.array(*[F.lit(v) for v in _SIGNS[b * N_PLANES + i]])
-        dj = _dot_scaled(F.col("embedding"), signs_j)
-        bit = F.when(dj >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return bucket
-
-
-# Round 6: embedding_cosine_dedup's banded-LSH pair work moves into the
-# same NumPy-kernel discipline as ann_nn_within_bucket (guide §4.2).
-# Measured at sf1.0 (OPTIMIZATION_r06.md): the JVM form spent ~90
-# core-seconds computing the 16 band-bucket dots on the scan's 2 splits
-# (twice — once per self-join side) and ~865 core-seconds verifying
-# ~5e7 candidate pairs at the JVM's ~8-10 us/pair floor.  The kernel
-# form computes bucket bits exactly in NumPy (int64 floor sums — the
-# identical scaled-long sign test), groups by (band, bucket), forms the
-# within-bucket upper-triangle products in blocked GEMM, and emits only
+# embedding_cosine_dedup's banded-LSH pair work follows the same
+# NumPy-kernel discipline as ann_nn_within_bucket.  The kernels compute
+# bucket bits exactly in NumPy (int64 floor sums — the oracle's
+# scaled-long sign test), group by (band, bucket), form the
+# within-bucket upper-triangle products in blocked GEMM, and emit only
 # pairs whose approximate sim clears DEDUP_TAU - _NN_MARGIN with their
 # EXACT scaled-long dots; the 6-dp rounding and the >= tau filter stay
 # in JVM expressions, so a pair the kernel drops (sim <= tau - 1e-4 +
 # ~1e-9 GEMM drift) can never round back up to tau, and emitted pairs
 # carry bit-exact dots.  Multi-band duplicates collapse in a DISTINCT
-# over the (deterministic) shortlist rows, exactly as the candidate
-# DISTINCT did.
+# over the (deterministic) shortlist rows, as the oracle's candidate
+# DISTINCT does.
 def _make_band_buckets_kernel(n_bands: int, n_planes: int, signs):
     """mapInPandas factory: (vec_id, embedding, nrm) -> one row per band
     with the exact hyperplane bucket id (sign bits of scaled-long
@@ -915,7 +803,7 @@ def _band_pair_shortlist(grp, tau, margin):
     nr = grp["nrm"].to_numpy(dtype=np.float64)
     vid = grp["vec_id"].to_numpy(dtype=np.int64)
     outs = []
-    block = max(1, (1 << 24) // n)
+    block = max(1, _GEMM_CELLS // n)
     for b0 in range(0, n, block):
         b1 = min(b0 + block, n)
         approx = (E[b0:b1] @ E.T) / nr[b0:b1, None] / nr[None, :]
@@ -946,16 +834,16 @@ def _band_pair_shortlist(grp, tau, margin):
 def embedding_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup via hyperplane LSH (SimHash over the
     vector space): per band, bucket = sign bits of N_PLANES
-    random-hyperplane dots, pair join WITHIN a bucket only; candidates
-    from all N_BANDS bands are unioned, deduped, and cosine >= tau
-    verified.  The signed dot is summed as scaled longs, so the sign
-    test is an exact integer comparison — bucket assignment is
-    bit-identical across engines.
+    random-hyperplane dots, pairs formed WITHIN a (band, bucket) group
+    only (see the kernel header above); candidates from all N_BANDS
+    bands are deduped and cosine >= tau verified.  The signed dot is
+    summed as scaled longs, so the sign test is an exact integer
+    comparison — bucket assignment is bit-identical across engines.
 
-    Scale: each band's pair join is bounded by bucket size (vs n^2);
+    Scale: each group's pair work is bounded by bucket size (vs n^2);
     more planes -> smaller buckets (precision of the candidate set),
-    more bands -> higher recall (classic OR-banding); the union's
-    DISTINCT shuffles only candidate pairs.
+    more bands -> higher recall (classic OR-banding); the DISTINCT
+    shuffles only shortlisted pairs.
 
     respread here is a MEASURED per-op decision (finding #36): the
     per-band bucket-bit dots run at scan parallelism and this query is
@@ -969,106 +857,27 @@ def embedding_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doc_ocr_spark.operators import respread
 
     emb = respread(_emb_with_norms(spark, sf_dir), min_bytes=2 << 20)
-    if N_BANDS > 1 and _os.environ.get("SPARK_GRAFT_EMBDD_IMPL", "kernel") == "kernel":
-        withb = emb.select("vec_id", "embedding", "nrm").mapInPandas(
-            _make_band_buckets_kernel(N_BANDS, N_PLANES, _SIGNS),
-            "band long, bucket long, vec_id long, "
-            "embedding array<float>, nrm double",
-        )
-        shortlist = (
-            withb.groupby("band", "bucket")
-            .applyInPandas(
-                _make_band_pair_kernel(DEDUP_TAU, _NN_MARGIN),
-                "qid long, cid long, dot long, qn double, cn double",
-            )
-            .distinct()
-        )
-        sims = shortlist.select(
-            "qid", "cid",
-            F.round(
-                (F.col("dot").cast("double") / _S)
-                / (F.col("qn") * F.col("cn")),
-                6,
-            ).alias("sim"),
-        )
-        return sims.filter(F.col("sim") >= DEDUP_TAU).select(
-            F.col("qid").alias("vec_a"), F.col("cid").alias("vec_b"), "sim"
-        )
-    if N_BANDS > 1:
-        # JVM single-pass banding (SPARK_GRAFT_EMBDD_IMPL=jvm), kept
-        # for A/B: ALL band buckets in ONE projection —
-        # posexplode(array(bucket_0..bucket_{B-1})) keys each vector's
-        # B bucket ids by (band, bucket), and a single self-join on
-        # (band, bucket) replaces the round-5 per-band loop of N_BANDS
-        # scans + self-joins + union (one embeddings pass, one join,
-        # guide §2.4).  The candidate set is identical: a pair collides
-        # in band b iff it shares bucket_b, and the DISTINCT dedups
-        # multi-band collisions exactly as the union did.
-        withb = emb.select(
-            "vec_id",
-            F.posexplode(
-                F.array(*[_band_bucket_col(b) for b in range(N_BANDS)])
-            ).alias("band", "bucket"),
-        )
-        cand = (
-            withb.alias("q")
-            .join(
-                withb.alias("c"),
-                (F.col("q.band") == F.col("c.band"))
-                & (F.col("q.bucket") == F.col("c.bucket"))
-                & (F.col("q.vec_id") < F.col("c.vec_id")),
-            )
-            .select(
-                F.col("q.vec_id").alias("qid"),
-                F.col("c.vec_id").alias("cid"),
-            )
-        )
-        pairs = (
-            cand.distinct()
-            .join(
-                emb.select(
-                    F.col("vec_id").alias("qid"),
-                    F.col("embedding").alias("qe"),
-                    F.col("nrm").alias("qn"),
-                ),
-                "qid",
-            )
-            .join(
-                emb.select(
-                    F.col("vec_id").alias("cid"),
-                    F.col("embedding").alias("ce"),
-                    F.col("nrm").alias("cn"),
-                ),
-                "cid",
-            )
-        )
-        sims = _pair_sims(pairs, [])
-        return sims.filter(F.col("sim") >= DEDUP_TAU).select(
-            F.col("qid").alias("vec_a"), F.col("cid").alias("vec_b"), "sim"
-        )
-    withb = emb.select("vec_id", "embedding", "nrm", _band_bucket_col(0).alias("bucket"))
-    # identical-subtree self-join (finding 15).  At bench SF the planner
-    # broadcasts one side (no shuffle pair to dedupe), but at corpus
-    # scale this becomes a sort-merge self-join on bucket and the
-    # canonical-equal sides then share ONE exchange via ReusedExchange
-    # — the same mechanism ann_nn_within_bucket's regression test pins.
-    pairs = (
-        withb.alias("q")
-        .join(
-            withb.alias("c"),
-            (F.col("q.bucket") == F.col("c.bucket"))
-            & (F.col("q.vec_id") < F.col("c.vec_id")),
-        )
-        .select(
-            F.col("q.vec_id").alias("qid"),
-            F.col("c.vec_id").alias("cid"),
-            F.col("q.embedding").alias("qe"),
-            F.col("c.embedding").alias("ce"),
-            F.col("q.nrm").alias("qn"),
-            F.col("c.nrm").alias("cn"),
-        )
+    withb = emb.select("vec_id", "embedding", "nrm").mapInPandas(
+        _make_band_buckets_kernel(N_BANDS, N_PLANES, _SIGNS),
+        "band long, bucket long, vec_id long, "
+        "embedding array<float>, nrm double",
     )
-    sims = _pair_sims(pairs, [])
+    shortlist = (
+        withb.groupby("band", "bucket")
+        .applyInPandas(
+            _make_band_pair_kernel(DEDUP_TAU, _NN_MARGIN),
+            "qid long, cid long, dot long, qn double, cn double",
+        )
+        .distinct()
+    )
+    sims = shortlist.select(
+        "qid", "cid",
+        F.round(
+            (F.col("dot").cast("double") / _S)
+            / (F.col("qn") * F.col("cn")),
+            6,
+        ).alias("sim"),
+    )
     return sims.filter(F.col("sim") >= DEDUP_TAU).select(
         F.col("qid").alias("vec_a"), F.col("cid").alias("vec_b"), "sim"
     )

@@ -3,11 +3,15 @@ selection vs an independent Python reference (plus the published
 guarantee), and the inverted-index df cap under a hot-shingle corpus."""
 
 import hashlib
+import math
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from doc_ocr_spark.operators import dedup as D
+from doc_ocr_spark.operators import similarity as S
 
 
 def _winnow_ref(text: str, k: int = D.WINNOW_K, w: int = D.WINNOW_W) -> set[str]:
@@ -166,7 +170,7 @@ def test_cc_nonconvergence_raises_loudly(spark):
 
 
 def test_cc_pointer_doubling_same_labels_fewer_rounds(spark):
-    """SPARK_GRAFT_CC_DOUBLING adds the pointer-jumping shortcut:
+    """doubling=True adds the pointer-jumping shortcut:
     identical fixpoint, O(log diameter) rounds on the chain."""
     import time
 
@@ -436,38 +440,183 @@ def test_span_removal_keeper_verbatim_loser_excised(spark, tmp_path):
         assert got[i].n_words == len(texts[i].split(" "))
 
 
-def test_nn_kernel_matches_jvm_pair_join(spark, monkeypatch):
-    """Round 6: the cogrouped NumPy shortlist path must produce EXACTLY
-    the rows of the JVM pair-join path (the dots are bit-exact and the
-    margin shortlist always contains the argmax, so the two
-    formulations are the same function)."""
-    import doc_ocr_spark.operators.similarity as S
+# Similarity kernels called directly on pandas frames, no Spark session
+# (a grouped-map UDF tested through a local call of its function).
+# Their Spark plumbing is checked end to end by test_entry_parity
+# against the DuckDB oracle; here each kernel is compared with a
+# per-element Python reference on small seeded frames.
 
-    sf = "/root/testdata/sf0.001"
-    monkeypatch.setattr(S, "_NN_IMPL", "cogroup")
-    kernel_rows = sorted(
-        map(tuple, S.ann_nn_within_bucket(spark, sf).collect())
+_SCALE = 1e12
+
+
+def _ref_dot(x, y) -> int:
+    """Scaled-long dot, one element at a time: sum floor((x*y)*1e12)."""
+    return sum(math.floor(float(a) * float(b) * _SCALE) for a, b in zip(x, y))
+
+
+def _sim(dot, xn, yn) -> float:
+    """The query's 6-dp cosine from a scaled-long dot and two norms."""
+    return round((int(dot) / _SCALE) / (float(xn) * float(yn)), 6)
+
+
+def _ref_sim(x, y, xn, yn) -> float:
+    return _sim(_ref_dot(x, y), xn, yn)
+
+
+def _vec_frame(ids, vecs) -> pd.DataFrame:
+    """(vec_id, embedding, nrm) as the kernels receive it: float32
+    embeddings, norms from the exact scaled-long sum of squares."""
+    vecs = [np.asarray(v, np.float32) for v in vecs]
+    return pd.DataFrame(
+        {
+            "vec_id": np.asarray(list(ids), np.int64),
+            "embedding": vecs,
+            "nrm": np.asarray(
+                [math.sqrt(_ref_dot(v, v) / _SCALE) for v in vecs], np.float64
+            ),
+        }
     )
-    monkeypatch.setattr(S, "_NN_IMPL", "jvm")
-    jvm_rows = sorted(map(tuple, S.ann_nn_within_bucket(spark, sf).collect()))
-    assert kernel_rows == jvm_rows
-    assert len(kernel_rows) > 0
 
 
-def test_embdd_kernel_matches_jvm_single_pass(spark, monkeypatch):
-    """Round 6: the (band, bucket) NumPy kernel path of
-    embedding_cosine_dedup must produce EXACTLY the pairs of the JVM
-    single-pass posexplode path (bucket bits and dots are bit-exact;
-    the tau-margin shortlist can only add pairs the JVM filter also
-    rejects)."""
-    import doc_ocr_spark.operators.similarity as S
+def _clustered(n, n_bases, seed):
+    """n float32 vectors around n_bases random directions; the noise
+    puts same-base cosine sims around DEDUP_TAU (about 0.4)."""
+    rng = np.random.default_rng(seed)
+    bases = rng.standard_normal((n_bases, S.DIM))
+    noise = 1.2 * rng.standard_normal((n, S.DIM))
+    return (bases[rng.integers(0, n_bases, n)] + noise).astype(np.float32)
 
-    sf = "/root/testdata/sf0.001"
-    monkeypatch.delenv("SPARK_GRAFT_EMBDD_IMPL", raising=False)
-    kernel_rows = sorted(
-        map(tuple, S.embedding_cosine_dedup(spark, sf).collect())
+
+def _nn_bucket():
+    """One bucket's (probe, index) sides.  Probe 100..109 are also
+    index rows (self-pairs to skip); probe 336..339 copy index
+    136..139 under other ids; index 140 and 141 both copy probe 345,
+    an exact tie that the argmax resolves to the smaller cid.  For
+    probe 346, index 142 is its double (sim 1) and index 99 a nudged
+    copy whose sim also rounds to 1.000000 but is ~1e-7 lower in the
+    GEMM: the argmax is 99, so the shortlist must reach below the
+    best approximate sim."""
+    v = _clustered(50, 4, seed=11)
+    nudged = v[46].copy()
+    nudged[0] += 0.005
+    index = _vec_frame(
+        [99] + list(range(100, 143)),
+        [nudged] + list(v[:40]) + [v[45], v[45], 2 * v[46]],
     )
-    monkeypatch.setenv("SPARK_GRAFT_EMBDD_IMPL", "jvm")
-    jvm_rows = sorted(map(tuple, S.embedding_cosine_dedup(spark, sf).collect()))
-    assert kernel_rows == jvm_rows
-    assert len(kernel_rows) > 0
+    probe = _vec_frame(
+        list(range(100, 110)) + list(range(336, 350)),
+        list(v[:10]) + list(v[36:50]),
+    )
+    return probe, index
+
+
+def test_nn_shortlist_kernel_exact_dots_and_argmax():
+    probe, index = _nn_bucket()
+    out = S._nn_shortlist_kernel((7,), probe, index)
+    assert (out["bucket"] == 7).all()
+    assert (out["qid"] != out["cid"]).all()
+    cands = list(zip(index["vec_id"], index["embedding"], index["nrm"]))
+    emb = dict(zip(index["vec_id"], index["embedding"]))
+    ties = 0
+    for qid, qe, qn in zip(probe["vec_id"], probe["embedding"], probe["nrm"]):
+        sims = {c: _ref_sim(qe, ce, qn, cn) for c, ce, cn in cands if c != qid}
+        best = max(sims.values())
+        tied = {c for c, s in sims.items() if s == best}
+        ties += len(tied) > 1
+        rows = out[out["qid"] == qid]
+        assert tied <= set(rows["cid"]), (qid, tied)
+        assert [_ref_dot(qe, emb[c]) for c in rows["cid"]] == list(rows["dot"])
+        # the Spark-side argmax over the shortlist: (sim desc, cid asc)
+        got = max(
+            (_sim(d, a, b), -c)
+            for d, a, b, c in zip(rows["dot"], rows["qn"], rows["cn"], rows["cid"])
+        )
+        assert got == (best, -min(tied))
+    assert ties >= 2
+
+
+def test_similarity_kernels_empty_inputs():
+    probe, index = _nn_bucket()
+    cols = ["qid", "bucket", "cid", "dot", "qn", "cn"]
+    for p, i in ((probe.iloc[:0], index), (probe, index.iloc[:0])):
+        out = S._nn_shortlist_kernel((7,), p, i)
+        assert list(out.columns) == cols and len(out) == 0
+        assert str(out["dot"].dtype) == "int64"
+    for n in (0, 1):
+        out = S._band_pair_shortlist(index.iloc[:n], S.DEDUP_TAU, S._NN_MARGIN)
+        assert list(out.columns) == ["qid", "cid", "dot", "qn", "cn"]
+        assert len(out) == 0
+    signs = S._hyperplane_signs(2 * S.N_PLANES)
+    kern = S._make_band_buckets_kernel(2, S.N_PLANES, signs)
+    assert list(kern(iter([index.iloc[:0]]))) == []
+
+
+@pytest.mark.parametrize("n_bands", [1, 4])
+def test_band_kernels_match_bruteforce(n_bands):
+    n_planes = S.N_PLANES
+    signs = S._hyperplane_signs(n_planes * n_bands)
+    vecs = _clustered(80, 8, seed=23)
+    vecs[79] = vecs[78]  # exact duplicate: one bucket in every band
+    frame = _vec_frame(range(1000, 1080), vecs)
+    kern = S._make_band_buckets_kernel(n_bands, n_planes, signs)
+    # mapInPandas hands the kernel several batches, some empty
+    buckets = pd.concat(
+        list(kern(iter([frame.iloc[:30], frame.iloc[:0], frame.iloc[30:]]))),
+        ignore_index=True,
+    )
+    want_bucket = {
+        (b, vid): sum(
+            1 << i
+            for i in range(n_planes)
+            if _ref_dot(v, signs[b * n_planes + i]) >= 0
+        )
+        for vid, v in zip(frame["vec_id"], frame["embedding"])
+        for b in range(n_bands)
+    }
+    got_bucket = dict(
+        zip(zip(buckets["band"], buckets["vec_id"]), buckets["bucket"])
+    )
+    assert len(buckets) == len(want_bucket) and got_bucket == want_bucket
+
+    pair_kernel = S._make_band_pair_kernel(S.DEDUP_TAU, S._NN_MARGIN)
+    short = pd.concat(
+        [pair_kernel(k, g) for k, g in buckets.groupby(["band", "bucket"])],
+        ignore_index=True,
+    )
+    assert (short["qid"] < short["cid"]).all()
+    emb = dict(zip(frame["vec_id"], frame["embedding"]))
+    nrm = dict(zip(frame["vec_id"], frame["nrm"]))
+    pairs = list(zip(short["qid"], short["cid"]))
+    assert [_ref_dot(emb[q], emb[c]) for q, c in pairs] == list(short["dot"])
+    sims = map(_sim, short["dot"], short["qn"], short["cn"])
+    got = {p for p, s in zip(pairs, sims) if s >= S.DEDUP_TAU}
+    collide = {
+        (q, c)
+        for q in emb
+        for c in emb
+        if q < c
+        and any(want_bucket[b, q] == want_bucket[b, c] for b in range(n_bands))
+    }
+    want = {
+        (q, c) for q, c in collide
+        if _ref_sim(emb[q], emb[c], nrm[q], nrm[c]) >= S.DEDUP_TAU
+    }
+    assert got == want
+    assert (1078, 1079) in want and len(want) < len(collide)
+
+
+def test_similarity_kernels_same_output_in_small_blocks(monkeypatch):
+    probe, index = _nn_bucket()
+    frame = _vec_frame(range(60), _clustered(60, 6, seed=5))
+    nn = S._nn_shortlist_kernel((3,), probe, index)
+    band = S._band_pair_shortlist(frame, S.DEDUP_TAU, S._NN_MARGIN)
+    assert len(nn) > 0 and len(band) > 0
+    # a few rows per block, then 1 (a bucket wider than the cell budget)
+    for cells in (3 * len(index), 1):
+        monkeypatch.setattr(S, "_GEMM_CELLS", cells)
+        pd.testing.assert_frame_equal(
+            S._nn_shortlist_kernel((3,), probe, index), nn
+        )
+        pd.testing.assert_frame_equal(
+            S._band_pair_shortlist(frame, S.DEDUP_TAU, S._NN_MARGIN), band
+        )

@@ -142,9 +142,11 @@ def test_ivf_assignment_aggregates_not_windows(spark):
 
 
 def test_norms_and_buckets_need_no_shuffle(spark):
-    """Embedding norms + hyperplane bucket bits are in-row projections:
-    up to the bucket self-join, embedding_cosine_dedup's only exchanges
-    are the two pair-join sides (round 1 spent a shuffle per norm/agg)."""
+    """Embedding norms are an in-row projection (round 1 spent a shuffle
+    per norm/agg), and the hyperplane bucket bits are computed map-side
+    in embedding_cosine_dedup's mapInPandas kernel: the (vec_id,
+    embedding, nrm) frame both similarity kernels read must carry no
+    Exchange."""
     from doc_ocr_spark.operators.similarity import _emb_with_norms
 
     plan = explain_str(
@@ -193,9 +195,10 @@ def test_repetition_stats_is_map_only(spark):
 
 
 def test_nn_bucket_self_join_reuses_assignment(spark):
-    """ann_nn_within_bucket's self-join sides must be the identical
-    subtree so the IVF assignment (centroid sims + max_by) executes
-    once: the final adaptive plan must contain a ReusedExchange."""
+    """ann_nn_within_bucket's probe and index sides must filter one
+    shared IVF assignment subtree (centroid sims + ranking window), so
+    the assignment executes once for both cogroup inputs: the final
+    adaptive plan must contain a ReusedExchange."""
     from doc_ocr_spark.operators.similarity import ann_nn_within_bucket
 
     df = ann_nn_within_bucket(spark, "/root/testdata/sf0.001")
