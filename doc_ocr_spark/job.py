@@ -1,8 +1,9 @@
 """The batch extraction job: read -> Arrow kernel -> salted repartition
 -> partitioned write + per-partition lineage; checkpoint/resume.
-(The exchange defaults to AFTER the map-only kernel so the shuffle moves
-extracted rows, not raw html — see run_extraction; --exchange pre keeps
-the input-side salted repartition for degenerate source layouts.)
+The one exchange follows the kernel (``extract_bucketed``, shared with
+streaming ingest), so raw html is never grouped by key.  Giant blobs are
+bounded without one: the keyless respread of split-starved scans, the
+kernel's ``_BYTE_BUDGET`` flush and ``arrow.maxRecordsPerBatch``.
 
 Launchable via ``spark-submit --py-files doc_ocr_spark.zip job.py`` or
 ``python -m doc_ocr_spark.job`` (north_rule: spark-submit --py-files on a
@@ -59,12 +60,15 @@ def lineage_path(output: str) -> str:
 
 
 def completed_buckets(spark: SparkSession, output: str) -> list[int]:
-    """Buckets already committed to lineage (empty on first run)."""
-    try:
-        ldf = spark.read.parquet(lineage_path(output))
-    except Exception:
+    """Buckets already committed to lineage (empty on first run, or
+    after a first run died inside the lineage append).  Any read error
+    propagates: read as empty, it would make --resume recompute all."""
+    lineage = lineage_path(output)
+    path = spark._jvm.org.apache.hadoop.fs.Path(lineage)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
         return []
-    return [r.part_bucket for r in ldf.select("part_bucket").distinct().collect()]
+    ldf = spark.read.schema("part_bucket int").parquet(lineage)
+    return [r.part_bucket for r in ldf.distinct().collect()]
 
 
 def _list_data_files(spark: SparkSession, output: str) -> dict[str, int]:
@@ -122,8 +126,8 @@ def _lineage_from_files(
     row counts from parquet footers (a few KB per file, read in the
     driver by a small thread pool), bytes from the listing.  Never
     touches row data.  The driver-side reads stay few at any corpus
-    size: the default post-kernel exchange puts each bucket in one
-    write task, so a run adds at most ``n_buckets`` files.  Returns one
+    size: the post-kernel exchange puts each bucket in one write
+    task, so a run adds at most ``n_buckets`` files.  Returns one
     local row per bucket, built from pandas so that it reaches the JVM
     as an Arrow-backed local relation (a list of tuples would go
     through a Python worker)."""
@@ -156,27 +160,17 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-# html blobs above this are "giants": a handful of them landing in one
-# bucket would make that task a straggler (SURVEY.md §7.4.2).
-GIANT_HTML_BYTES = 1 << 20
-_GIANT_SUBSPLITS = 8
-
-
-def with_skew_split(df: DataFrame) -> DataFrame:
-    """Secondary exchange key for giant blobs.
-
-    Normal rows keep skew_sub=0, so each bucket's bulk stays together;
-    giant rows fan out over {_GIANT_SUBSPLITS} sub-keys (stable in url —
-    a deterministic function, not a random salt, so reruns place rows
-    identically).  Used ONLY in the repartition key: output partitioning
-    and resume stay at part_bucket granularity.
-    """
-    return df.withColumn(
-        "skew_sub",
-        F.when(
-            F.length("html") > GIANT_HTML_BYTES,
-            F.pmod(F.xxhash64("url", F.lit(1)), F.lit(_GIANT_SUBSPLITS)).cast("int"),
-        ).otherwise(F.lit(0)),
+def extract_bucketed(
+    df: DataFrame, n_buckets: int, templates: list[dict] | None = None
+) -> DataFrame:
+    """Kernel, then the one exchange of every extraction write (batch
+    job and streaming ingest): the EXTRACTED rows, ~4x fewer bytes than
+    raw html, hash-repartitioned by url-hash bucket.  Each bucket lands
+    wholly in one task, so a ``partitionBy("part_bucket")`` write adds
+    one file per bucket.  The partition count comes from the session
+    (AQE may coalesce it), not from ``n_buckets``."""
+    return with_bucket(apply_kernel(df, templates), n_buckets).repartition(
+        "part_bucket"
     )
 
 
@@ -187,22 +181,13 @@ def run_extraction(
     n_buckets: int = 64,
     resume: bool = False,
     templates: list[dict] | None = None,
-    exchange: str = "post",
     input_format: str = "parquet",
 ) -> dict:
     """Returns run metrics (docs, bytes, wall seconds, buckets run).
 
-    ``exchange`` places the one salted shuffle of the job:
-
-    - ``post`` (default): scan -> kernel (map-only, parallel by parquet
-      row-group splits, bytes/task bounded by maxPartitionBytes) ->
-      repartition the EXTRACTED rows by url-hash bucket -> partitioned
-      write.  Shuffles ~4x fewer bytes (extracted text vs raw html) —
-      measured 0.57 -> 0.87 scaling efficiency on the 60k-doc bench.
-    - ``pre``: repartition the raw corpus by (bucket, giant-blob
-      sub-split) before the kernel — for sources whose split layout
-      is degenerate (one giant row group / unsplittable files), where
-      the explicit url-hash exchange is the only way to spread work.
+    scan -> ``extract_bucketed`` -> partitioned write.  Shuffling the
+    extracted rows instead of raw html measured 0.57 -> 0.87 scaling
+    efficiency on the 60k-doc bench.
 
     ``input_format='warc'`` reads raw WARC/WARC.gz archives
     (sources/warc.py, one task per file — Common Crawl's natural
@@ -228,26 +213,7 @@ def run_extraction(
     if done:
         corpus = corpus.filter(~F.col("part_bucket").isin([int(b) for b in done]))
 
-    if exchange == "pre":
-        # salted exchange of the raw corpus: keyed by the stable
-        # url-hash bucket plus the giant-blob sub-split (explicit skew
-        # handling — a task never holds more than ~1/8 of a bucket's
-        # giants).  n_buckets >> executors so stragglers interleave.
-        corpus = with_skew_split(corpus).repartition(
-            n_buckets, "part_bucket", "skew_sub"
-        )
-
-    extracted = apply_kernel(
-        corpus, templates, respread_input=(exchange != "pre")
-    )
-    # reattach the bucket for partitioned output (stable function of url,
-    # so this is a projection, not a join)
-    extracted = with_bucket(extracted, n_buckets)
-    if exchange == "post":
-        # salted exchange of the extracted rows: same bucket key, same
-        # output layout/resume granularity, ~4x fewer bytes through the
-        # wire; input-side skew is bounded by parquet split bytes.
-        extracted = extracted.repartition(n_buckets, "part_bucket")
+    extracted = extract_bucketed(corpus, n_buckets, templates)
 
     # run totals ride the write action itself — no separate agg pass
     obs = Observation("extract_metrics")
@@ -321,7 +287,6 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--master", default=None)
-    ap.add_argument("--exchange", choices=["pre", "post"], default="post")
     ap.add_argument(
         "--input-format", choices=["parquet", "warc"], default="parquet"
     )
@@ -333,7 +298,6 @@ def main() -> None:
         args.output,
         n_buckets=args.buckets,
         resume=args.resume,
-        exchange=args.exchange,
         input_format=args.input_format,
     )
     rate = m["docs"] / m["wall_s"] if m["wall_s"] else 0.0

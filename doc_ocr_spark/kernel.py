@@ -6,6 +6,10 @@ batches stream through ``extract_batches`` which calls
 whole inside one batch iteration (SURVEY.md §7.4.1 — never split a
 document), and output batches are emitted under a byte budget so a
 single giant html blob cannot balloon task memory (skew rule §7.4.2).
+Together with the session's ``arrow.maxRecordsPerBatch`` cap on input
+rows per batch and the keyless respread of split-starved scans, this is
+all the giant-blob handling the job needs: its one exchange comes after
+the kernel (job.extract_bucketed), so no key ever groups raw html.
 """
 
 from __future__ import annotations
@@ -121,11 +125,7 @@ def make_kernel(templates: list[dict] | None):
     return extract_batches
 
 
-def apply_kernel(
-    df: DataFrame,
-    templates: list[dict] | None = None,
-    respread_input: bool = True,
-) -> DataFrame:
+def apply_kernel(df: DataFrame, templates: list[dict] | None = None) -> DataFrame:
     """``(url, html, ...) -> OUTPUT_SCHEMA`` via mapInArrow.
 
     Column pruning is explicit: only (url, html) ever crosses into
@@ -148,13 +148,13 @@ def apply_kernel(
     (micro-batch DFs report no input files, so the floor returns them
     unchanged).
 
-    ``respread_input=False`` is for callers that already placed their
-    own exchange below the kernel (job.py --exchange pre: the salted
-    bucket repartition must not be followed by a round-robin scatter,
-    which would undo the bucket alignment the writer relies on).
+    Pass a scan plus narrow projections and filters: respread counts
+    the input's row groups, which an exchange below the kernel would
+    hide.  Callers place their exchange AFTER the kernel
+    (job.extract_bucketed).
     """
     pruned = df.select("url", "html")
-    if respread_input and not pruned.isStreaming:
+    if not pruned.isStreaming:
         from doc_ocr_spark.operators import respread
 
         pruned = respread(pruned, min_bytes=1 << 20)

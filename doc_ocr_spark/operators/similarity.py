@@ -126,11 +126,12 @@ def _sims(left: DataFrame, right: DataFrame) -> DataFrame:
 
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k for the first N_QUERIES vectors.
-    respread (finding #36, 8 MB floor): the q x n dot stage runs at
-    scan parallelism — sf1eq A/B 1.82 -> 0.63 s."""
+    respread (finding #36, no floor): the q x n dot stage runs at
+    scan parallelism — sf1eq A/B 1.82 -> 0.63 s.  Without the old 2 MB
+    floor it takes 0.91x the time at sf0.1 on 4 cores (flat below)."""
     from doc_ocr_spark.operators import respread
 
-    emb = respread(_emb_with_norms(spark, sf_dir), min_bytes=2 << 20)
+    emb = respread(_emb_with_norms(spark, sf_dir))
     q = emb.filter(F.col("vec_id") < N_QUERIES)
     sims = _sims(q, emb)
     w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("cid").asc())
@@ -272,11 +273,12 @@ def ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF assignment: route every vector to its max-cosine centroid
     (centroids = vec_id < N_CENTROIDS; deterministic stand-in for a
     k-means fit, which would be seeded at corpus scale).  respread
-    (finding #36, 8 MB floor): the n x k assignment dots run at scan
-    parallelism — sf1eq A/B 16.4 -> 1.4 s."""
+    (finding #36, no floor): the n x k assignment dots run at scan
+    parallelism — sf1eq A/B 16.4 -> 1.4 s.  Without the old 2 MB floor
+    it takes 0.85x the time at sf0.1 on 4 cores (flat below)."""
     from doc_ocr_spark.operators import respread
 
-    emb = respread(_emb_with_norms(spark, sf_dir), min_bytes=2 << 20)
+    emb = respread(_emb_with_norms(spark, sf_dir))
     cents = emb.filter(F.col("vec_id") < N_CENTROIDS)
     return _argmax_assign(_sims(cents, emb))
 
@@ -968,14 +970,15 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic k-means-on-MapReduce layout.  Only the centroid update
     shuffles, and that agg is (k x DIM) cells regardless of corpus
     size (explode + partial map-side combine).  respread (finding
-    #36, 8 MB floor): the map-only assignment dots run at scan
-    parallelism — sf1eq A/B 29.2 -> 3.0 s.
+    #36, no floor): the map-only assignment dots run at scan
+    parallelism — sf1eq A/B 29.2 -> 3.0 s.  Without the old 2 MB floor
+    it takes 0.80x the time at sf0.1 on 4 cores (flat below).
     """
     from doc_ocr_spark.operators import respread
 
-    emb = respread(
-        load(spark, sf_dir, "embeddings"), min_bytes=2 << 20
-    ).withColumn("vn", _norm_expr(F.col("embedding")))
+    emb = respread(load(spark, sf_dir, "embeddings")).withColumn(
+        "vn", _norm_expr(F.col("embedding"))
+    )
     # centroid state as arrays: (cid, carr array<double>)
     cents = emb.filter(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cid"),

@@ -6,8 +6,10 @@ a file-arrival stream: new page parquet files land in a directory, each
 micro-batch runs the SAME batch kernel, output and lineage commit
 per batch (exactly-once via the streaming checkpoint).
 
-``foreachBatch`` reuses doc_ocr_spark.job.run-style logic, so batch and
-streaming share one code path — no second extraction implementation.
+``foreachBatch`` calls ``doc_ocr_spark.job.extract_bucketed``, the same
+kernel -> bucket exchange as the batch job, so batch and streaming share
+one code path and one exchange placement — no second extraction
+implementation.
 Exactly-once = checkpoint (batch replay on crash) + idempotent batch
 writes (dynamic overwrite of the batch's own ``batch_id=`` partitions);
 see ``process_batch``.
@@ -25,8 +27,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from doc_ocr_spark.job import with_bucket
-from doc_ocr_spark.kernel import apply_kernel
+from doc_ocr_spark.job import extract_bucketed
 
 PAGES_SCHEMA = StructType(
     [
@@ -81,7 +82,8 @@ def write_extracted_batch(
     n_buckets: int,
     templates: list[dict] | None = None,
 ) -> None:
-    """One micro-batch: kernel + bucket + IDEMPOTENT write.
+    """One micro-batch: ``extract_bucketed`` (kernel, then the one
+    bucket exchange of the extracted rows) + IDEMPOTENT write.
 
     Exactly-once discipline: foreachBatch alone is at-least-once — a
     crash between a plain append and the checkpoint commit replays the
@@ -94,12 +96,8 @@ def write_extracted_batch(
     partition level, so bucket partition-pruning is unchanged for
     downstream consumers."""
     _fail_on_legacy_layout(batch_df.sparkSession, output_dir)
-    extracted = apply_kernel(
-        with_bucket(batch_df, n_buckets).repartition("part_bucket"),
-        templates,
-    )
     (
-        with_bucket(extracted, n_buckets)
+        extract_bucketed(batch_df, n_buckets, templates)
         .withColumn("batch_id", F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

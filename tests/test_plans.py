@@ -412,3 +412,43 @@ def test_respread_floor_sized_without_local_stat(spark, tmp_path, monkeypatch):
     spread = respread(starved, min_bytes=1 << 20)
     assert "RoundRobinPartitioning" in spread._jdf.queryExecution().toString()
     assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_extraction_writes_exchange_once_after_kernel(spark, tmp_path, monkeypatch):
+    """The batch job and streaming ingest place their output the same
+    way: below the kernel only respread's keyless round-robin may move
+    the raw html, and the one keyed exchange, by part_bucket, sits above
+    it.  The writer is stopped before it runs a job; the plan is read
+    off the DataFrame it was handed."""
+    import re
+
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from doc_ocr_spark.job import run_extraction
+    from doc_ocr_spark.streaming import write_extracted_batch
+
+    class _Stop(Exception):
+        pass
+
+    written = []
+
+    def _capture(self, *args, **kwargs):
+        written.append(self._df)
+        raise _Stop
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", _capture)
+    # one row group of 2 MB: split-starved and above the kernel's floor
+    src = _random_pages_parquet(tmp_path / "pages.parquet", n_row_groups=1, mb=2)
+    with pytest.raises(_Stop):
+        run_extraction(spark, src, str(tmp_path / "out"), n_buckets=8)
+    with pytest.raises(_Stop):
+        write_extracted_batch(spark.read.parquet(src), 0, str(tmp_path / "s"), 8)
+
+    for df in written:
+        plan = explain_str(df, "simple").split("== Physical Plan ==")[-1]
+        above, below = plan.split("MapInArrow", 1)
+        below_kernel = re.findall(r"Exchange (\w+)", below)
+        assert below_kernel == ["RoundRobinPartitioning"], plan
+        assert len(re.findall(r"Exchange hashpartitioning\(part_bucket", above)) == 1, plan
+        assert len(re.findall(r"Exchange ", above)) == 1, plan

@@ -216,59 +216,22 @@ def test_job_resume_processes_only_pending(spark, corpus_path, tmp_path):
     ) == []
 
 
-def test_skew_split_spreads_giants(spark, tmp_path):
-    """Explicit skew handling: giant html blobs in ONE url-hash bucket
-    must fan out across multiple shuffle partitions, while normal rows
-    keep skew_sub=0 (bucket bulk stays together)."""
-    from pyspark.sql import functions as F
+def test_completed_buckets_raises_on_corrupt_lineage(spark, tmp_path):
+    """A _lineage that is missing or holds no committed file reads as
+    "nothing committed".  An unreadable lineage file must raise: read
+    as empty, it would make a --resume run silently recompute every
+    bucket."""
+    from doc_ocr_spark.job import lineage_path
 
-    from doc_ocr_spark.job import GIANT_HTML_BYTES, with_bucket, with_skew_split
-
-    giant = b"x" * (GIANT_HTML_BYTES + 1)
-    rows = [(f"https://g.test/{i}", bytearray(giant)) for i in range(32)]
-    rows += [(f"https://n.test/{i}", bytearray(b"<p>small</p>")) for i in range(32)]
-    df = with_skew_split(
-        with_bucket(
-            spark.createDataFrame(rows, "url string, html binary"), 1
-        )
-    )
-    out = df.select(
-        "url",
-        "part_bucket",
-        "skew_sub",
-        (F.length("html") > GIANT_HTML_BYTES).alias("is_giant"),
-    ).collect()
-    subs_giants = {r.skew_sub for r in out if r.is_giant}
-    subs_normal = {r.skew_sub for r in out if not r.is_giant}
-    assert subs_normal == {0}
-    assert len(subs_giants) >= 3  # 32 giants over 8 sub-keys
-    # the exchange key spreads giants over distinct partitions
-    parts = (
-        df.repartition(8, "part_bucket", "skew_sub")
-        .withColumn("pid", F.spark_partition_id())
-        .filter(F.length("html") > GIANT_HTML_BYTES)
-        .select("pid")
-        .distinct()
-        .count()
-    )
-    assert parts >= 3
-
-
-def test_pre_exchange_path_matches_golden(spark, corpus_path, tmp_path):
-    """--exchange pre (input-side salted repartition + giant sub-split)
-    must produce byte-identical output to the golden run, like the
-    default post-kernel exchange."""
-    out = str(tmp_path / "out_pre")
-    m = run_extraction(spark, corpus_path, out, n_buckets=8, exchange="pre")
-    assert m["docs"] == N_DOCS
-    result = spark.read.parquet(out)
-    assert (
-        compare_to_golden(
-            _rows(result.drop("part_bucket", "bytes_in", "extractor_version")),
-            golden_rows(N_DOCS),
-        )
-        == []
-    )
+    out = str(tmp_path / "out_corrupt")
+    assert completed_buckets(spark, out) == []
+    # a first run that died inside its lineage append leaves only this
+    os.makedirs(os.path.join(lineage_path(out), "_temporary", "0"))
+    assert completed_buckets(spark, out) == []
+    with open(os.path.join(lineage_path(out), "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        completed_buckets(spark, out)
 
 
 def test_job_resume_after_crash_between_data_and_lineage(spark, corpus_path, tmp_path):
