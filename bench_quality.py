@@ -6,11 +6,11 @@ not just wall time:
 
 - **ANN recall@1**: `ann_nn_within_bucket` (IVF-bucketed nearest
   neighbour) vs the exact all-pairs nearest neighbour derived from the
-  same similarity definition, swept over the (probe shape, P) grid at
-  the shipped refine default; plus the embedding near-dup OR-banding
-  sweep (finding #31).  A query's answer counts as correct when
-  its in-bucket NN similarity equals the true NN similarity (ties in
-  cosine are equivalent answers).
+  same similarity definition, swept over P in {1, 2, 4, 8} on the one
+  probe shape at the shipped refine default; plus the embedding
+  near-dup OR-banding sweep (finding #31).  A query's answer counts as
+  correct when its in-bucket NN similarity equals the true NN
+  similarity (ties in cosine are equivalent answers).
 - **LSH pair recall**: `minhash_lsh_pairs` (band-bucketed candidates,
   true-Jaccard verified -> precision 1.0 by construction) vs
   `ngram_jaccard_pairs` (exact df-capped inverted index) at the same
@@ -60,15 +60,11 @@ def main() -> None:
     exact.count()
 
     nprobe_rows = {}
-    # restore defaults after the sweep (oracle not needed here; recall only)
+    # restore the default after the sweep (oracle not needed here;
+    # recall only)
     default_nprobe = similarity.N_PROBE
-    default_mode = similarity.IVF_PROBE_MODE
-    # sym P=1 == asym P=1; sym P=8 omitted (130 s for a point the asym
-    # curve dominates — finding #30)
-    grid = [("sym", 1), ("sym", 2), ("sym", 4),
-            ("asym", 2), ("asym", 4), ("asym", 8)]
-    for mode, p in grid:
-        similarity.IVF_PROBE_MODE = mode
+    mode = similarity.IVF_PROBE_MODE
+    for p in (1, 2, 4, 8):
         similarity.N_PROBE = p
         t0 = time.monotonic()
         approx = similarity.ann_nn_within_bucket(spark, sf_dir).select(
@@ -92,7 +88,6 @@ def main() -> None:
             "sec": round(time.monotonic() - t0, 2),
         }
     similarity.N_PROBE = default_nprobe
-    similarity.IVF_PROBE_MODE = default_mode
     exact.unpersist()
     ann = None
 
@@ -194,7 +189,7 @@ def main() -> None:
         "sf_dir": sf_dir,
         "ann_probe_grid": nprobe_rows,
         "ivf_nprobe_default": default_nprobe,
-        "ivf_probe_mode_default": default_mode,
+        "ivf_probe_mode": mode,
         "ivf_refine_default": similarity.IVF_REFINE,
         "ivf_centroids": similarity.N_CENTROIDS,
         "lsh_pair_recall": round(n_found / max(n_exact, 1), 4),

@@ -195,14 +195,6 @@ def run_extraction(
     downstream (kernel, exchange, lineage, resume) is identical.
     """
     t0 = time.monotonic()
-    if input_format == "warc":
-        from doc_ocr_spark.sources.warc import read_warc
-
-        corpus = read_warc(spark, input_path)
-    else:
-        corpus = spark.read.parquet(input_path)
-    corpus = with_bucket(corpus.select("url", "html"), n_buckets)
-
     done = set(completed_buckets(spark, output))
     if done and not resume:
         # the output append would silently duplicate finished buckets
@@ -210,6 +202,25 @@ def run_extraction(
             f"{output} already has committed lineage; pass --resume to "
             "process only pending buckets (or use a fresh output path)"
         )
+    if done and done.issuperset(range(n_buckets)):
+        # nothing pending: a no-op resume never opens the input
+        return {
+            "docs": 0,
+            "bytes": 0,
+            "text_bytes": 0,
+            "wall_s": time.monotonic() - t0,
+            "buckets_run": 0,
+            "resumed": True,
+        }
+
+    if input_format == "warc":
+        from doc_ocr_spark.sources.warc import read_warc
+
+        corpus = read_warc(spark, input_path)
+    else:
+        # explicit schema: an inferred one costs a schema-inference job
+        corpus = spark.read.schema("url string, html binary").parquet(input_path)
+    corpus = with_bucket(corpus.select("url", "html"), n_buckets)
     if done:
         corpus = corpus.filter(~F.col("part_bucket").isin([int(b) for b in done]))
 

@@ -172,82 +172,27 @@ SELECT qid, cid, sim, rank FROM (
 """
 
 
-# Multi-probe IVF: search the top-P centroid buckets per vector instead
-# of 1 (the standard FAISS nprobe recall lever), in one of two SHAPES:
-#
-# - 'sym' (the r04 formulation): BOTH sides of the within-bucket pair
-#   join carry the top-P assignment — a pair matches when the two
-#   vectors' top-P bucket sets intersect.  Pair work grows ~P^2*n/k
-#   and the materialized assignment is P*n rows.
-# - 'asym' (the standard IVF/FAISS shape, round-5 default): the INDEX
-#   side keeps only each vector's primary (top-1) bucket, the query
-#   side probes its top-P.  The index table stays n rows — the
-#   big-side shuffle/storage does not grow with the recall knob — and
-#   pair work is ~P*n/k.  The cost is recall per probe (a candidate is
-#   reachable only through its primary bucket).
-#
-# Measured head-to-head at sf0.1 (BENCH/quality_r05.json, finding #30):
-# asym P=4 = 0.649 recall @ 11.6 s BEATS sym P=2 = 0.639 @ 13.3 s on
-# both axes; asym P=8 = 0.931 @ 14.8 s vs sym P=4 = 0.985 @ 43.3 s.
-# Defaults are (asym, P=4) — recall@1 0.616/0.649 at sf0.001/sf0.1,
-# floor >= 0.6 asserted in tests/test_dedup_ops.py so a knob change
-# cannot silently ship a low-recall default.  The oracle SQL is
-# generated from the same two constants, so parity holds at any
-# (P, mode) combination.
-N_PROBE = int(_os.environ.get("SPARK_GRAFT_IVF_NPROBE", "4"))
-IVF_PROBE_MODE = _os.environ.get("SPARK_GRAFT_IVF_PROBE_MODE", "asym")
-# Lloyd refinement of the IVF centroids before assignment (round 5,
-# finding #32): the seeded centroids (vec_id < k) are a deterministic
-# stand-in for a k-means fit; refining them with R Lloyd rounds before
-# the bucket assignment raises recall at ZERO query-time cost — the
-# pair-join work is unchanged, only the fit (n x k dots per round +
-# a (k x DIM)-cell agg) runs up front, and at corpus scale the fit is
-# the same one-pass cost as the assignment itself.  Measured asym P=4
-# recall@1: sf0.1 0.655 -> 0.690 -> 0.697 and sf0.001 0.646 -> 0.728
-# -> 0.746 at R=0/1/2.  Default 1; the oracle SQL unrolls the same
+# Multi-probe IVF in the standard FAISS shape: the QUERY side probes its
+# top-N_PROBE centroid buckets (the nprobe recall lever), the INDEX side
+# keeps only each vector's primary (top-1) bucket.  The index table
+# stays n rows — the big-side shuffle does not grow with the recall
+# knob — and pair work is ~P*n/k.  The measured grid in
+# BENCH/quality_r05.json (finding #30) picked this shape over the
+# symmetric one (both sides top-P): P=4 = 0.649 recall @ 11.6 s beat
+# symmetric P=2 = 0.639 @ 13.3 s on both axes.  Recall@1 floor >= 0.6
+# is asserted in tests/test_dedup_ops.py.
+N_PROBE = 4
+IVF_PROBE_MODE = "asym"  # the one shape above (recorded by bench.py)
+# Lloyd refinement of the IVF centroids before assignment (finding
+# #32): the seeded centroids (vec_id < k) are a deterministic stand-in
+# for a k-means fit; refining them with R Lloyd rounds raises recall at
+# ZERO query-time cost — only the fit (n x k dots per round + a
+# (k x DIM)-cell agg) runs up front, once per corpus (_staged_cents).
+# Measured P=4 recall@1: sf0.1 0.655 -> 0.690 -> 0.697 and sf0.001
+# 0.646 -> 0.728 -> 0.746 at R=0/1/2.  The oracle SQL unrolls the same
 # rounds (exactness discipline: scaled-long sums, fixed-order double
-# division — proven by ann_ivf_kmeans' parity), so parity holds at any
-# (P, mode, R).
-IVF_REFINE = int(_os.environ.get("SPARK_GRAFT_IVF_REFINE", "1"))
-if IVF_PROBE_MODE not in ("sym", "asym"):
-    # a typo ('assym', 'SYM') would otherwise silently run the
-    # non-default shape — the dispatch below tests == "asym" only
-    raise ValueError(
-        f"SPARK_GRAFT_IVF_PROBE_MODE={IVF_PROBE_MODE!r}: must be 'sym' or 'asym'"
-    )
-
-
-def _ranked_assign(sims: DataFrame, p: int) -> DataFrame:
-    """(vec_id, bucket, sim, rank): per-vector top-``p`` centroids by
-    sim (centroid-id ascending on exact ties), rank RETAINED so both
-    the probe set (rank <= p) and the primary assignment (rank == 1)
-    can be filtered from this one subtree — the shuffle under the
-    window (which is where the n x k centroid-sims leg materializes)
-    is then a single ReusedExchange instead of two computations.
-    Measured at the sf1eq point (200k vectors, k=100): deriving the
-    asym index side from a separate max_by aggregation cost 122 s for
-    the full query vs 47 s for sym; sharing the ranked subtree is the
-    fix (see finding #30)."""
-    w = Window.partitionBy("cid").orderBy(F.col("sim").desc(), F.col("qid").asc())
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= p)
-        .select(
-            F.col("cid").alias("vec_id"), F.col("qid").alias("bucket"),
-            "sim", "rank",
-        )
-    )
-
-
-def _topp_assign(sims: DataFrame, p: int) -> DataFrame:
-    """(vec_id, bucket, sim): per-vector top-``p`` centroids by sim
-    (centroid-id ascending on exact ties).  p=1 routes through the
-    max_by aggregation (partial agg, no per-group sort); p>1 uses the
-    row_number window over the n x k sims — k is the centroid count,
-    so the window input is small by construction."""
-    if p <= 1:
-        return _argmax_assign(sims)
-    return _ranked_assign(sims, p).drop("rank")
+# division), so parity is bit-exact.
+IVF_REFINE = 1
 
 
 def _argmax_assign(sims: DataFrame) -> DataFrame:
@@ -293,34 +238,53 @@ SELECT cid AS vec_id, qid AS bucket, sim FROM (
 """
 
 
+def _cent_sims(emb: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, cid, sim): unrounded cosine of every vector against
+    every centroid array — a BROADCAST nested loop over the k centroid
+    arrays with in-row dots.  ``emb`` carries (vec_id, embedding, nrm),
+    ``cents`` (cid, carr)."""
+    cents_n = cents.withColumn("cn", _norm_expr(F.col("carr")))
+    return emb.crossJoin(F.broadcast(cents_n)).select(
+        "vec_id",
+        "cid",
+        (
+            (_dot_scaled(F.col("embedding"), F.col("carr")).cast("double") / _S)
+            / (F.col("nrm") * F.col("cn"))
+        ).alias("sim"),
+    )
+
+
+def _nearest_cent(emb: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, cid, sim): every vector's max-sim centroid (unrounded
+    sim, centroid-id ascending on ties)."""
+    w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cid").asc())
+    return (
+        _cent_sims(emb, cents)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("vec_id", "cid", "sim")
+    )
+
+
 def _lloyd_cents(emb: DataFrame, rounds: int) -> DataFrame:
     """``rounds`` Lloyd iterations from the seeded centroids:
-    (cid, carr array<double>).  Same exactness discipline as
-    ann_ivf_kmeans (scaled-long mean sums, fixed-order divisions), so
-    the refined arrays are bit-identical to the oracle's unrolled CTEs.
-    ``emb`` must carry (vec_id, embedding, nrm)."""
+    (cid, carr array<double>).  Each round assigns every vector to its
+    nearest centroid (_nearest_cent) and recomputes the means;
+    scaled-long mean sums and fixed-order divisions keep the arrays
+    bit-identical to the oracle's unrolled CTEs.  ``emb`` must carry
+    (vec_id, embedding, nrm)."""
     cents = emb.filter(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cid"),
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("carr"),
     )
     for _ in range(rounds):
-        cents_n = cents.withColumn("cn", _norm_expr(F.col("carr")))
-        sims = emb.crossJoin(F.broadcast(cents_n)).select(
-            "vec_id",
-            "cid",
-            (
-                (_dot_scaled(F.col("embedding"), F.col("carr")).cast("double") / _S)
-                / (F.col("nrm") * F.col("cn"))
-            ).alias("sim"),
-        )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.col("sim").desc(), F.col("cid").asc()
-        )
-        assign = (
-            sims.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "cid")
-        )
+        assign = _nearest_cent(emb, cents).select("vec_id", "cid")
+        # mean accumulator uses the SMALL scale (1e6): unlike every
+        # other scaled sum here (bounded by DIM=64 terms), this one
+        # adds a term PER ASSIGNED VECTOR — at 1e12 a BIGINT would
+        # silently wrap at ~9.2e6 members/centroid in Spark while
+        # DuckDB promotes to HUGEINT, breaking engine parity at the
+        # 100 TB design point.  1e6 defers overflow to ~9.2e12.
         upd = (
             assign.join(emb, "vec_id")
             .select("cid", F.posexplode("embedding").alias("i", "val"))
@@ -372,34 +336,19 @@ def _staged_cents(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame
     return spark.read.parquet(staging.ensure_staged("ivf_cents", key, build))
 
 
-def _refined_ranked(
-    emb: DataFrame, p: int, spark: SparkSession = None, sf_dir: str = None
-) -> DataFrame:
-    """(vec_id, bucket, rank): top-``p`` REFINED centroids per vector
+def _refined_ranked(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
+    """(vec_id, bucket, rank): top-N_PROBE REFINED centroids per vector
     (sim rounded 6dp before ranking, centroid-id ascending on ties —
     both engines rank the identical rounded value).  No self-exclusion:
-    refined centroids are means, not corpus vectors.  With
-    (spark, sf_dir) the fit comes from the staged table (train once,
-    assign many); without, it is computed inline."""
-    cents = (
-        _staged_cents(spark, sf_dir, emb)
-        if spark is not None and sf_dir is not None
-        else _lloyd_cents(emb, IVF_REFINE)
-    )
-    cents_n = cents.withColumn("cn", _norm_expr(F.col("carr")))
-    sims = emb.crossJoin(F.broadcast(cents_n)).select(
-        "vec_id",
-        "cid",
-        F.round(
-            (_dot_scaled(F.col("embedding"), F.col("carr")).cast("double") / _S)
-            / (F.col("nrm") * F.col("cn")),
-            6,
-        ).alias("sim"),
+    refined centroids are means, not corpus vectors.  The fit comes
+    from the staged table (train once, assign many)."""
+    sims = _cent_sims(emb, _staged_cents(spark, sf_dir, emb)).withColumn(
+        "sim", F.round("sim", 6)
     )
     w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("cid").asc())
     return (
         sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= p)
+        .filter(F.col("rank") <= N_PROBE)
         .select("vec_id", F.col("cid").alias("bucket"), "rank")
     )
 
@@ -490,48 +439,26 @@ def _nn_shortlist_kernel(key, probe, index):
 
 def ann_nn_within_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup, the scale path end-to-end: IVF-assign every
-    vector to a bucket (Lloyd-refined centroids by default, finding
-    #32), then find each vector's nearest neighbour WITHIN its bucket
-    only.  At 100 TB the pair work is bounded by bucket size instead
-    of n^2 (the embedding analogue of LSH-banded MinHash in dedup.py)."""
+    vector to a bucket (Lloyd-refined centroids, finding #32), then
+    find each vector's nearest neighbour WITHIN its bucket only.  At
+    100 TB the pair work is bounded by bucket size instead of n^2 (the
+    embedding analogue of LSH-banded MinHash in dedup.py)."""
     emb = _emb_with_norms(spark, sf_dir)
-    index_rank = 1 if (IVF_PROBE_MODE == "asym" and N_PROBE > 1) else N_PROBE
-    if IVF_REFINE > 0:
-        # refined centroids: probe (rank <= P) and index (rank <=
-        # index_rank) filter ONE ranked subtree — same ReusedExchange
-        # discipline as the seeded path below; the fit itself is read
-        # from the staged centroid table (train once, assign many)
-        ranked = _refined_ranked(emb, N_PROBE, spark, sf_dir)
-        withb = emb.join(ranked.select("vec_id", "bucket"), "vec_id")
-        cand = (
-            withb
-            if index_rank == N_PROBE
-            else emb.join(
-                ranked.filter(F.col("rank") <= index_rank).select(
-                    "vec_id", "bucket"
-                ),
-                "vec_id",
-            )
-        )
-    elif IVF_PROBE_MODE == "asym" and N_PROBE > 1:
-        cents = emb.filter(F.col("vec_id") < N_CENTROIDS)
-        # standard IVF: the index side keeps primary buckets only; a
-        # (q, c) pair can then match through at most ONE bucket, so no
-        # duplicate pairs reach the NN window.  Probe (rank <= P) and
-        # index (rank == 1) both filter the SAME ranked subtree, so the
-        # expensive centroid-sims leg + its shuffle run once
-        # (ReusedExchange under the two windows — see _ranked_assign).
-        ranked = _ranked_assign(_sims(cents, emb), N_PROBE)
-        withb = emb.join(ranked.select("vec_id", "bucket"), "vec_id")
-        cand = emb.join(
-            ranked.filter(F.col("rank") == 1).select("vec_id", "bucket"),
-            "vec_id",
-        )
-    else:
-        cents = emb.filter(F.col("vec_id") < N_CENTROIDS)
-        assign = _topp_assign(_sims(cents, emb), N_PROBE).select("vec_id", "bucket")
-        withb = emb.join(assign, "vec_id")
-        cand = withb
+    # the query side probes its top-N_PROBE buckets, the index side
+    # keeps its primary bucket only, so a (q, c) pair matches through
+    # at most ONE bucket.  Both sides filter one ranked subtree, but
+    # Spark infers a different WindowGroupLimit under each filter
+    # (N_PROBE vs 1), so the centroid-sims leg and its shuffle run once
+    # per side; only the emb and centroid broadcasts are reused.  The
+    # index filter is ``rank <= 1``, as in the oracle: ``rank = 1``
+    # plans the same operators, but AQE then creates the index-side
+    # shuffle stage first, and the query took 2% and 7% longer
+    # (medians of two 12-run same-session A/Bs at sf0.01, 4 cores).
+    ranked = _refined_ranked(spark, sf_dir, emb)
+    withb = emb.join(ranked.select("vec_id", "bucket"), "vec_id")
+    cand = emb.join(
+        ranked.filter(F.col("rank") <= 1).select("vec_id", "bucket"), "vec_id"
+    )
     pcols = ["vec_id", "bucket", "embedding", "nrm"]
     # re-alias each side's columns (fresh exprIds) — withb and cand
     # share lineage, and cogroup's column resolution rejects the
@@ -561,9 +488,8 @@ def ann_nn_within_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # comparison key (sim, -cid, -bucket) is unique per qid (cid/bucket
     # identify the pair), so the argmax is total and matches the
     # oracle's ORDER BY sim DESC, cid, bucket exactly.  bucket as the
-    # FINAL tie-break is inert at nprobe=1 (a pair shares one bucket);
-    # at nprobe>1 it pins which probed bucket the duplicate (qid, cid)
-    # row reports.
+    # FINAL tie-break is inert (the index side holds each vector in one
+    # bucket, so a (qid, cid) pair meets at most once).
     return (
         sims.groupBy(F.col("qid").alias("vec_id"))
         .agg(
@@ -581,10 +507,6 @@ def ann_nn_within_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("best.nn_id").alias("nn_id"), F.col("best.sim").alias("sim"),
         )
     )
-
-
-# index-side probe depth: primary-only in 'asym', top-P in 'sym'
-_INDEX_RANK = 1 if (IVF_PROBE_MODE == "asym" and N_PROBE > 1) else N_PROBE
 
 
 def _lloyd_ctes(rounds: int) -> str:
@@ -624,12 +546,13 @@ cents{r + 1} AS MATERIALIZED (
     return ",\n".join(parts)
 
 
-def _nn_bucket_sql() -> str:
-    if IVF_REFINE > 0:
-        # ranked assignment against the REFINED centroid arrays: sim is
-        # rounded 6dp BEFORE ranking (both engines rank the identical
-        # rounded value; ties -> centroid id), no self-exclusion
-        ranked = f"""ranked AS (
+# ranked assignment against the REFINED centroid arrays: sim is rounded
+# 6dp BEFORE ranking (both engines rank the identical rounded value;
+# ties -> centroid id), no self-exclusion.  The probe side takes the
+# top-N_PROBE buckets, the index side (cassign) the primary one.
+NN_BUCKET_SQL = f"""WITH {_NORMS_CTE},
+{_lloyd_ctes(IVF_REFINE)},
+ranked AS (
   SELECT vec_id, cid, rank FROM (
     SELECT e.vec_id, c.cid,
            row_number() OVER (PARTITION BY e.vec_id
@@ -638,22 +561,9 @@ def _nn_bucket_sql() -> str:
                                        c.cid) AS rank
     FROM emb e CROSS JOIN cents{IVF_REFINE} c
   ) WHERE rank <= {N_PROBE}
-)"""
-        probe = "SELECT vec_id, cid AS bucket FROM ranked"
-        cassign = f"SELECT vec_id, cid AS bucket FROM ranked WHERE rank <= {_INDEX_RANK}"
-        prelude = f"WITH {_NORMS_CTE},\n{_lloyd_ctes(IVF_REFINE)},\n{ranked},"
-    else:
-        prelude = f"""WITH {_NORMS_CTE}, {_sims_sql(f"< {N_CENTROIDS}")},
-ranked AS (
-  SELECT qid, cid, sim,
-         row_number() OVER (PARTITION BY cid ORDER BY sim DESC, qid) AS rank
-  FROM sims
-),"""
-        probe = f"SELECT cid AS vec_id, qid AS bucket FROM ranked WHERE rank <= {N_PROBE}"
-        cassign = f"SELECT cid AS vec_id, qid AS bucket FROM ranked WHERE rank <= {_INDEX_RANK}"
-    return f"""{prelude}
-probe AS ({probe}),
-cassign AS ({cassign}),
+),
+probe AS (SELECT vec_id, cid AS bucket FROM ranked),
+cassign AS (SELECT vec_id, cid AS bucket FROM ranked WHERE rank <= 1),
 withq AS (SELECT e.vec_id, e.embedding, e.nrm, a.bucket
           FROM emb e JOIN probe a USING (vec_id)),
 withc AS (SELECT e.vec_id, e.embedding, e.nrm, a.bucket
@@ -670,9 +580,6 @@ SELECT qid AS vec_id, bucket, cid AS nn_id, sim FROM (
   FROM bsims
 ) WHERE rank = 1
 """
-
-
-NN_BUCKET_SQL = _nn_bucket_sql()
 
 
 def _hyperplane_signs(n_planes: int, dim: int = DIM, seed: int = 20240816):
@@ -709,7 +616,7 @@ DEDUP_TAU = 0.35
 # only the DISTINCT over candidate pairs shuffles, bounded by the
 # candidate count.  Default picked from the measured recall/cost curve
 # in BENCH/quality_r05.json (finding #31); floor asserted in tests.
-N_BANDS = int(_os.environ.get("SPARK_GRAFT_LSH_BANDS", "4"))
+N_BANDS = 4
 _SIGNS = _hyperplane_signs(N_PLANES * N_BANDS)
 
 
@@ -730,7 +637,7 @@ def _make_band_buckets_kernel(n_bands: int, n_planes: int, signs):
     with the exact hyperplane bucket id (sign bits of scaled-long
     dots).  Band config is captured in the CLOSURE at DAG-build time —
     worker processes re-import this module and would otherwise see the
-    env defaults, not a sweep's driver-side overrides (bench_quality
+    module constants, not a sweep's driver-side overrides (bench_quality
     monkeypatches N_BANDS/_SIGNS)."""
 
     def kernel(it):
@@ -902,14 +809,13 @@ _SGN_CTE = "sgn AS (SELECT " + ", ".join(
     f"{_signs_sql_list(j)}::DOUBLE[] AS sgn{j}" for j in range(_N_SGN)
 ) + ")"
 
-if N_BANDS > 1:
-    _CAND_UNION = "\n  UNION ALL\n".join(
-        f"  SELECT q.vec_id AS qid, c.vec_id AS cid\n"
-        f"  FROM withb q JOIN withb c"
-        f" ON q.bucket_{b} = c.bucket_{b} AND q.vec_id < c.vec_id"
-        for b in range(N_BANDS)
-    )
-    EMB_DEDUP_SQL = f"""
+_CAND_UNION = "\n  UNION ALL\n".join(
+    f"  SELECT q.vec_id AS qid, c.vec_id AS cid\n"
+    f"  FROM withb q JOIN withb c"
+    f" ON q.bucket_{b} = c.bucket_{b} AND q.vec_id < c.vec_id"
+    for b in range(N_BANDS)
+)
+EMB_DEDUP_SQL = f"""
 WITH {_NORMS_CTE},
 {_SGN_CTE},
 withb AS (
@@ -933,23 +839,6 @@ dsims AS (
 SELECT qid AS vec_a, cid AS vec_b, sim
 FROM dsims WHERE sim >= {DEDUP_TAU}
 """
-else:
-    EMB_DEDUP_SQL = f"""
-WITH {_NORMS_CTE},
-{_SGN_CTE},
-withb AS (
-  SELECT vec_id, embedding, nrm, {_band_bucket_sql(0)} AS bucket
-  FROM emb, sgn
-),
-dsims AS (
-  SELECT q.vec_id AS qid, c.vec_id AS cid,
-         round((CAST({_dot_scaled_sql("q.embedding", "c.embedding")} AS DOUBLE) / {_S_SQL})
-               / (q.nrm * c.nrm), 6) AS sim
-  FROM withb q JOIN withb c ON q.bucket = c.bucket AND q.vec_id < c.vec_id
-)
-SELECT qid AS vec_a, cid AS vec_b, sim
-FROM dsims WHERE sim >= {DEDUP_TAU}
-"""
 
 
 N_KMEANS_ROUNDS = 2  # init-assign -> update -> re-assign
@@ -957,7 +846,8 @@ N_KMEANS_ROUNDS = 2  # init-assign -> update -> re-assign
 
 def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with real Lloyd refinement: seed centroids (vec_id <
-    N_CENTROIDS), then iterate [assign -> recompute centroid means].
+    N_CENTROIDS), N_KMEANS_ROUNDS - 1 rounds of [assign -> recompute
+    centroid means] (_lloyd_cents), then one final assignment.
 
     Exactness discipline: every float reduction (dots, norms, centroid
     means) is a scaled-long integer sum, and divisions are written in
@@ -977,63 +867,9 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doc_ocr_spark.operators import respread
 
     emb = respread(load(spark, sf_dir, "embeddings")).withColumn(
-        "vn", _norm_expr(F.col("embedding"))
+        "nrm", _norm_expr(F.col("embedding"))
     )
-    # centroid state as arrays: (cid, carr array<double>)
-    cents = emb.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").alias("cid"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("carr"),
-    )
-
-    assign = None
-    for _round in range(N_KMEANS_ROUNDS):
-        cents_n = cents.withColumn("cn", _norm_expr(F.col("carr")))
-        sims = emb.crossJoin(F.broadcast(cents_n)).select(
-            "vec_id",
-            "cid",
-            (
-                (_dot_scaled(F.col("embedding"), F.col("carr")).cast("double") / _S)
-                / (F.col("vn") * F.col("cn"))
-            ).alias("sim"),
-        )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.col("sim").desc(), F.col("cid").asc()
-        )
-        assign = (
-            sims.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "cid", "sim")
-        )
-        if _round < N_KMEANS_ROUNDS - 1:
-            # mean accumulator uses the SMALL scale (1e6): unlike every
-            # other scaled sum here (bounded by DIM=64 terms), this one
-            # adds a term PER ASSIGNED VECTOR — at 1e12 a BIGINT would
-            # silently wrap at ~9.2e6 members/centroid in Spark while
-            # DuckDB promotes to HUGEINT, breaking engine parity at the
-            # 100 TB design point.  1e6 defers overflow to ~9.2e12.
-            expl = emb.select(
-                "vec_id",
-                F.explode(F.sequence(F.lit(1), F.lit(DIM))).alias("i"),
-                F.element_at("embedding", F.col("i")).cast("double").alias("val"),
-            )
-            upd = (
-                expl.join(assign.select("vec_id", "cid"), "vec_id")
-                .groupBy("cid", "i")
-                .agg(
-                    (
-                        F.sum(scaled_long(F.col("val"), _SM)).cast("double")
-                        / F.count(F.lit(1))
-                        / _SM
-                    ).alias("cval")
-                )
-            )
-            # rebuild the per-centroid array ordered by dimension index
-            cents = upd.groupBy("cid").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "cval"))),
-                    lambda s: s["cval"],
-                ).alias("carr")
-            )
+    assign = _nearest_cent(emb, _lloyd_cents(emb, N_KMEANS_ROUNDS - 1))
     return assign.select(
         "vec_id", F.col("cid").alias("bucket"), F.round("sim", 6).alias("sim")
     )

@@ -261,7 +261,7 @@ def test_ann_default_nprobe_recall_floor(spark):
 
     from doc_ocr_spark.operators import similarity as S
 
-    assert S.N_PROBE >= 2, "default SPARK_GRAFT_IVF_NPROBE regressed below 2"
+    assert S.N_PROBE >= 2, "N_PROBE regressed below 2"
     sf = "/root/testdata/sf0.001"
     emb = S._emb_with_norms(spark, sf)
     pairs = S._sims(emb, emb).filter(F.col("qid") != F.col("cid"))
@@ -310,22 +310,30 @@ def test_lang_id_accuracy_floor_on_constructed_ground_truth(spark):
     assert overall >= 0.95, acc
 
 
-def test_ivf_probe_mode_typo_raises_at_import():
-    """A mode typo must fail loudly at import — the dispatch tests
-    == 'asym' only, so 'assym' would silently run the sym shape."""
+def test_retired_ivf_lsh_env_vars_leave_oracles_unchanged():
+    """The probe shape, probe depth, refine rounds and band count are
+    constants, not env knobs: setting the retired env vars and
+    re-importing the module leaves every oracle string as it was."""
     import importlib
     import os
 
     import doc_ocr_spark.operators.similarity as S
 
-    os.environ["SPARK_GRAFT_IVF_PROBE_MODE"] = "assym"
+    before = dict(S.ORACLES)
+    retired = {
+        "SPARK_GRAFT_IVF_PROBE_MODE": "sym",
+        "SPARK_GRAFT_IVF_REFINE": "0",
+        "SPARK_GRAFT_IVF_NPROBE": "1",
+        "SPARK_GRAFT_LSH_BANDS": "1",
+    }
+    os.environ.update(retired)
     try:
-        with pytest.raises(ValueError, match="must be 'sym' or 'asym'"):
-            importlib.reload(S)
-    finally:
-        os.environ.pop("SPARK_GRAFT_IVF_PROBE_MODE")
         importlib.reload(S)
-    assert S.IVF_PROBE_MODE in ("sym", "asym")
+        assert S.ORACLES == before
+    finally:
+        for k in retired:
+            os.environ.pop(k)
+        importlib.reload(S)
 
 
 def test_embedding_dedup_default_bands_recall_floor(spark):
@@ -336,7 +344,7 @@ def test_embedding_dedup_default_bands_recall_floor(spark):
     pair must verify (precision 1.0 by construction)."""
     from doc_ocr_spark.operators import similarity as S
 
-    assert S.N_BANDS >= 2, "default SPARK_GRAFT_LSH_BANDS regressed below 2"
+    assert S.N_BANDS >= 2, "N_BANDS regressed below 2"
     sf = "/root/testdata/sf0.001"
     emb = S._emb_with_norms(spark, sf)
     exact = (

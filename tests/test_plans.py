@@ -419,7 +419,8 @@ def test_extraction_writes_exchange_once_after_kernel(spark, tmp_path, monkeypat
     way: below the kernel only respread's keyless round-robin may move
     the raw html, and the one keyed exchange, by part_bucket, sits above
     it.  The writer is stopped before it runs a job; the plan is read
-    off the DataFrame it was handed."""
+    off the DataFrame it was handed.  The batch job starts no Spark job
+    before its write (its input schema is given, not inferred)."""
     import re
 
     import pytest
@@ -440,8 +441,15 @@ def test_extraction_writes_exchange_once_after_kernel(spark, tmp_path, monkeypat
     monkeypatch.setattr(DataFrameWriter, "parquet", _capture)
     # one row group of 2 MB: split-starved and above the kernel's floor
     src = _random_pages_parquet(tmp_path / "pages.parquet", n_row_groups=1, mb=2)
-    with pytest.raises(_Stop):
-        run_extraction(spark, src, str(tmp_path / "out"), n_buckets=8)
+    sc = spark.sparkContext
+    sc.setJobGroup("before-write", "jobs run before the extraction write")
+    try:
+        with pytest.raises(_Stop):
+            run_extraction(spark, src, str(tmp_path / "out"), n_buckets=8)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("before-write")) == []
     with pytest.raises(_Stop):
         write_extracted_batch(spark.read.parquet(src), 0, str(tmp_path / "s"), 8)
 

@@ -183,13 +183,23 @@ def test_list_data_files_globs_committed_layout(spark, tmp_path):
 
 
 def test_job_resume_skips_completed_buckets(spark, corpus_path, tmp_path):
+    """A resume with every bucket committed is a no-op that returns
+    before it reads the input (it succeeds after the input is deleted);
+    a rerun without --resume refuses the committed output."""
+    import shutil
+
+    src = str(tmp_path / "pages.parquet")
+    shutil.copy(corpus_path, src)
     out = str(tmp_path / "out2")
-    run_extraction(spark, corpus_path, out, n_buckets=8)
+    run_extraction(spark, src, out, n_buckets=8)
     before = spark.read.parquet(out).count()
-    m = run_extraction(spark, corpus_path, out, n_buckets=8, resume=True)
+    os.remove(src)
+    m = run_extraction(spark, src, out, n_buckets=8, resume=True)
     assert m["resumed"] is True
-    assert m["docs"] == 0  # nothing left to do
+    assert (m["buckets_run"], m["docs"]) == (0, 0)  # nothing left to do
     assert spark.read.parquet(out).count() == before  # no duplicates
+    with pytest.raises(ValueError, match="already has committed lineage"):
+        run_extraction(spark, src, out, n_buckets=8)
 
 
 def test_job_resume_processes_only_pending(spark, corpus_path, tmp_path):
