@@ -18,7 +18,8 @@ not just wall time:
   shared by both sides so the comparison isolates the LSH banding.
 
 Usage: python bench_quality.py [sf_dir]  (default /root/testdata/sf0.1)
-Writes BENCH/quality_r06.json and prints one JSON line.
+Writes BENCH/quality_<sf_dir name>.json (e.g. quality_sf0.1.json) and
+prints one JSON line.
 """
 
 from __future__ import annotations
@@ -218,8 +219,9 @@ def main() -> None:
         "lang_id_note": "corpus text is language-independent; see test for real ground truth",
     }
     spark.stop()
+    name = os.path.basename(os.path.normpath(sf_dir))
     try:
-        with open(os.path.join(REPO, "BENCH", "quality_r06.json"), "w") as f:
+        with open(os.path.join(REPO, "BENCH", f"quality_{name}.json"), "w") as f:
             json.dump(out, f, indent=1)
     except OSError:
         pass

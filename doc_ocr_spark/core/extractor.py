@@ -23,10 +23,11 @@ from doc_ocr_spark.core.boilerplate import extract_main_content
 from doc_ocr_spark.core.htmltok import decode_html, tokenize_html
 from doc_ocr_spark.core.layout import (
     Line,
-    cluster_lines,
+    # not called here since the match carries the page's lines; kept
+    # because perfbench/trace.py times core phases by wrapping the names
+    # this module imports, cluster_lines among them
+    cluster_lines,  # noqa: F401
     detect_rotation,
-    line_text,
-    page_bounds,
     reading_order_lines,
     unrotate_tokens,
 )
@@ -101,7 +102,7 @@ def _lines_to_text(lines: list[Line]) -> tuple[str, list[tuple[str, int, int]]]:
     for ln in lines:
         if parts:
             pos += 1
-        txt = line_text(ln, sep=" ")
+        txt = ln.text
         start = pos
         parts.append(txt)
         pos += len(txt)
@@ -141,26 +142,23 @@ def _extract_pdftok(url: str, payload: bytes, templates: list[dict]) -> ExtractR
     res.template_name = m.template["name"]
 
     # restrict to the matched page (invoice_rule_extractor.py:69 — the
-    # reference's partition-pruning analogue)
-    page_toks = [t for t in tokens if t.page == m.page]
-    bounds = page_bounds(page_toks)
-    title_y_tol = m.template["match_rules"].get("title", {}).get("y_tol", 5.0)
-    tpl_lines = cluster_lines(page_toks, y_tol=title_y_tol)
-    title_line = m.title_line or title_fallback(tpl_lines)
+    # reference's partition-pruning analogue): the match carries that
+    # page's tokens, bounds and lines at the title rule's y_tol
+    title_line = m.title_line or title_fallback(m.lines)
     title_y = title_line.y_center if title_line else 0.0
 
     payload_dict: dict = {}
     for k, v in m.template.get("fixed_fields", {}).items():
         set_path(payload_dict, k, v)
     for fspec in m.template.get("non_table_fields", []):
-        value = extract_scalar_field(fspec, tpl_lines, page_toks, bounds, title_y=title_y)
+        value = extract_scalar_field(fspec, m.lines, m.tokens, m.bounds, title_y=title_y)
         if value is not None:
             set_path(payload_dict, fspec["name"], value)
 
     table_spec = m.template.get("table")
     table_errors: list[str] = []
     if table_spec:
-        tr = extract_table(tpl_lines, table_spec)
+        tr = extract_table(m.lines, table_spec)
         table_errors = tr.errors
         if tr.rows:
             payload_dict["items"] = tr.rows

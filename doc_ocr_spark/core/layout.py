@@ -9,7 +9,9 @@ reconstruction (SURVEY.md §2.5):
   is deterministic regardless of Spark partitioning.
 - ``merge_tokens``    L3 (text_normalize.py:131-159) — x-gap adjacency
   fold with bbox union.
-- ``line_text``       L4 — x-ordered concatenation.
+- ``Line``            L4 — an immutable reading line whose x-ordered
+  tokens, space-joined text, no-separator text and normalized text are
+  each derived once, on first use, and shared by every later reader.
 - ``page_bounds``     L5, ``region_filter`` L6.
 - ``detect_columns`` / ``reading_order_text`` — the column-order
   reconstruction the north_star asks for (the HTML-era analogue of the
@@ -26,39 +28,71 @@ from __future__ import annotations
 from operator import attrgetter
 from dataclasses import dataclass, field
 
-from doc_ocr_spark.core.tokens import Token
+from doc_ocr_spark.core.tokens import Token, normalize_text
 
 
 _BY_X1 = attrgetter("x1")
 _BY_PAGE_Y_X = attrgetter("page", "y_center", "x1")
 
 
-@dataclass
-class Line:
-    """~ reference Line (text_normalize.py:68-75)."""
+class _view:
+    """A value derived from a Line on first read and stored in the
+    instance dict, which then shadows this descriptor: what
+    ``functools.cached_property`` does, without the lock it takes on
+    every first read before Python 3.12 (a line's views are read on the
+    per-document hot path)."""
 
-    items: list[Token]
+    def __init__(self, derive):
+        self.derive = derive
+        self.name = derive.__name__
+        self.__doc__ = derive.__doc__
+
+    def __get__(self, line, owner=None):
+        if line is None:
+            return self
+        value = line.__dict__[self.name] = self.derive(line)
+        return value
+
+
+@dataclass(frozen=True)
+class Line:
+    """~ reference Line (text_normalize.py:68-75).
+
+    Immutable once built: a step that changes the tokens (merging)
+    builds a new Line.  Each view below is derived on first use and
+    kept, so template match, scalar fields and table rebuild share one
+    derivation per line.
+    """
+
+    items: tuple[Token, ...]
     y_center: float
     page: int
-    # lazy (len(items)-guarded) caches: lines are append-only while
-    # cluster_lines builds them and read-only afterwards, but the
-    # length guard keeps the cache correct even if that ever changes.
-    # line_text / sorted_items are called O(templates x patterns) times
-    # per line on the hot path (~60 re-sorts per line measured).
-    _sorted_cache: tuple[int, list[Token]] | None = None
-    _text_cache: tuple[int, str] | None = None
 
-    def sorted_items(self) -> list[Token]:
-        if self._sorted_cache is None or self._sorted_cache[0] != len(self.items):
-            self._sorted_cache = (
-                len(self.items),
-                sorted(self.items, key=_BY_X1),
-            )
-        return self._sorted_cache[1]
+    @_view
+    def by_x(self) -> tuple[Token, ...]:
+        """The tokens in x order."""
+        return tuple(sorted(self.items, key=_BY_X1))
+
+    @_view
+    def text(self) -> str:
+        """Space-joined token texts: the extracted_text surface."""
+        return " ".join(t.text for t in self.by_x)
+
+    @_view
+    def compact(self) -> str:
+        """Token texts joined with no separator: what patterns match."""
+        return "".join(t.text for t in self.by_x)
+
+    @_view
+    def norm(self) -> str:
+        """``normalize_text`` of ``compact``: what anchors match."""
+        return normalize_text(self.compact)
 
 
-def cluster_lines(tokens: list[Token], y_tol: float = 5.0) -> list[Line]:
-    """L1 — greedy reading-line clustering.
+def _line_groups(tokens: list[Token], y_tol: float) -> list[list]:
+    """L1 — greedy reading-line clustering into ``[page, y_center,
+    tokens]`` groups (``cluster_lines`` wraps them in Lines; rotation
+    scoring and reading order read the tokens without a Line).
 
     Sort by (page, y_center); scan; each token joins the nearest *recent*
     line on the same page within ``y_tol`` of the line's centroid,
@@ -68,21 +102,26 @@ def cluster_lines(tokens: list[Token], y_tol: float = 5.0) -> list[Line]:
     semantics (text_normalize.py:110), kept because golden byte-identity
     is defined over it.
     """
-    lines: list[Line] = []
+    groups: list[list] = []
     for tok in sorted(tokens, key=_BY_PAGE_Y_X):
-        target: Line | None = None
-        for line in reversed(lines):
-            if line.page != tok.page:
+        target: list | None = None
+        for group in reversed(groups):
+            if group[0] != tok.page:
                 break
-            if abs(line.y_center - tok.y_center) <= y_tol:
-                target = line
+            if abs(group[1] - tok.y_center) <= y_tol:
+                target = group
                 break
         if target is None:
-            lines.append(Line(items=[tok], y_center=tok.y_center, page=tok.page))
+            groups.append([tok.page, tok.y_center, [tok]])
         else:
-            target.items.append(tok)
-            target.y_center = (target.y_center + tok.y_center) / 2.0
-    return lines
+            target[2].append(tok)
+            target[1] = (target[1] + tok.y_center) / 2.0
+    return groups
+
+
+def cluster_lines(tokens: list[Token], y_tol: float = 5.0) -> list[Line]:
+    """L1 — the reading lines of ``_line_groups``."""
+    return [Line(tuple(items), y, page) for page, y, items in _line_groups(tokens, y_tol)]
 
 
 def merge_tokens(
@@ -124,18 +163,6 @@ def merge_tokens(
                 continue
         out.append(tok)
     return out
-
-
-def line_text(line: Line, sep: str = " ") -> str:
-    """L4 — concatenate token texts in x order."""
-    if sep == " ":  # the hot default; other seps stay uncached
-        if line._text_cache is None or line._text_cache[0] != len(line.items):
-            line._text_cache = (
-                len(line.items),
-                " ".join(t.text for t in line.sorted_items()),
-            )
-        return line._text_cache[1]
-    return sep.join(t.text for t in line.sorted_items())
 
 
 def page_bounds(tokens: list[Token]) -> tuple[float, float]:
@@ -188,11 +215,11 @@ def _alignment_score(tokens: list[Token]) -> float | None:
     page's line lefts are bimodal {margin1, margin2}, which inflates
     variance but keeps mode mass high (measured: variance misclassified
     42/450 corpus pages, mode mass 0).  None = too few lines."""
-    lines = cluster_lines(tokens)
-    if len(lines) < 3:
+    groups = _line_groups(tokens, 5.0)
+    if len(groups) < 3:
         return None
-    lefts = [min(t.x1 for t in line.items) for line in lines]
-    rights = [max(t.x2 for t in line.items) for line in lines]
+    lefts = [min(t.x1 for t in items) for _, _, items in groups]
+    rights = [max(t.x2 for t in items) for _, _, items in groups]
 
     def _mode_mass(xs: list[float], tol: float = 4.0) -> float:
         buckets: dict[int, int] = {}
@@ -385,7 +412,7 @@ def reading_order_lines(
         split = detect_columns(page_toks)
         for col in range(split.n_columns):
             col_toks = [t for t in page_toks if split.column_of(t) == col]
-            for line in cluster_lines(col_toks, y_tol=y_tol):
-                line.items = merge_tokens(line.items, max_x_gap=max_x_gap)
-                out.append(line)
+            for page_no, y, items in _line_groups(col_toks, y_tol):
+                merged = merge_tokens(items, max_x_gap=max_x_gap)
+                out.append(Line(tuple(merged), y, page_no))
     return out

@@ -25,7 +25,6 @@ from dataclasses import dataclass
 from doc_ocr_spark.core.layout import (
     Line,
     cluster_lines,
-    line_text,
     merge_tokens,
     page_bounds,
     region_filter,
@@ -52,6 +51,12 @@ class TemplateMatch:
     page: int
     score: float
     title_line: Line | None
+    # the matched page, as matching saw it: its tokens, their bounds and
+    # its lines at the title rule's y_tol (field and table extraction
+    # read these, so each line's text views are derived once)
+    tokens: list[Token]
+    bounds: tuple[float, float]
+    lines: list[Line]
 
 
 def _find_title_line(lines: list[Line], parts: list[str]) -> Line | None:
@@ -59,7 +64,7 @@ def _find_title_line(lines: list[Line], parts: list[str]) -> Line | None:
     (template_matcher.py:38-66)."""
     norm_parts = [normalize_text(p) for p in parts]
     for line in lines:
-        text = normalize_text(line_text(line, sep=""))
+        text = line.norm
         pos = 0
         ok = True
         for part in norm_parts:
@@ -87,11 +92,9 @@ def _anchor_hits(
         search_lines = cluster_lines(sub, y_tol=anchor.get("y_tol", 5.0))
     if "regex" in anchor:
         pat = re.compile(anchor["regex"])
-        return any(pat.search(line_text(l, sep="")) for l in search_lines)
+        return any(pat.search(l.compact) for l in search_lines)
     needle = normalize_text(anchor["text"])
-    return any(
-        needle in normalize_text(line_text(l, sep="")) for l in search_lines
-    )
+    return any(needle in l.norm for l in search_lines)
 
 
 def match_template(
@@ -145,7 +148,9 @@ def match_template(
             if rejected or score < rules.get("min_score", 0.0):
                 continue
             if best is None or score > best.score:
-                best = TemplateMatch(tpl, page, score, title_line)
+                best = TemplateMatch(
+                    tpl, page, score, title_line, page_toks, bounds, lines
+                )
     return best
 
 
@@ -180,7 +185,7 @@ def _extract_text_mode(
                     return _value_from_match(m)
         else:
             for line in lines:
-                m = pat.search(line_text(line, sep=""))
+                m = pat.search(line.compact)
                 if m:
                     return _value_from_match(m)
         return None
@@ -193,7 +198,7 @@ def _extract_text_mode(
         x_min = [0.0, float(x_min)]
     y_tol = field.get("y_tol", 8.0)
     for line in lines:
-        for tok in line.sorted_items():
+        for tok in line.by_x:
             if needle not in normalize_text(tok.text):
                 continue
             # (a) same-token tail after the anchor text
@@ -253,22 +258,25 @@ def _extract_pos_mode(
         return None
     lines = cluster_lines(sub, y_tol=field.get("y_tol", 5.0))
     if field.get("merge_tokens", True):
-        for l in lines:
-            l.items = merge_tokens(l.items, max_x_gap=field.get("max_x_gap", 6.0))
+        max_x_gap = field.get("max_x_gap", 6.0)
+        lines = [
+            Line(tuple(merge_tokens(l.items, max_x_gap=max_x_gap)), l.y_center, l.page)
+            for l in lines
+        ]
     pat = re.compile(field["regex"]) if "regex" in field else None
     if pat is not None:
         for line in sorted(lines, key=lambda l: l.y_center):
-            m = pat.search(line_text(line, sep=""))
+            m = pat.search(line.compact)
             if m:
                 return _value_from_match(m)
         return None
     if field.get("allow_extra", False):
         joined = "".join(
-            line_text(l, sep="") for l in sorted(lines, key=lambda l: l.y_center)
+            l.compact for l in sorted(lines, key=lambda l: l.y_center)
         )
         return joined or None
     first = min(lines, key=lambda l: l.y_center)
-    return line_text(first, sep="") or None
+    return first.compact or None
 
 
 def extract_scalar_field(
@@ -315,7 +323,7 @@ def detect_header(
     min_hit = hm.get("min_hit", len(labels))
     max_x_gap = hm.get("max_x_gap", 10.0)
     for line in sorted(lines, key=lambda l: (l.page, l.y_center)):
-        toks = merge_tokens(line.sorted_items(), max_x_gap=max_x_gap)
+        toks = merge_tokens(line.by_x, max_x_gap=max_x_gap)
         norm = [normalize_text(t.text) for t in toks]
         spans: dict[str, tuple[float, float]] = {}
         cursor = 0
@@ -388,7 +396,7 @@ def assign_row_cells(
     x_center; per-column x-ordered concat, stripped
     (invoice_rule_extractor.py:700-708)."""
     cells: dict[str, list[str]] = {}
-    for tok in line.sorted_items():
+    for tok in line.by_x:
         xc = tok.x_center
         for label, left, right in columns:
             if left <= xc <= right:
@@ -414,16 +422,15 @@ def _is_sum_line(line: Line, key: str, max_x_gap: float) -> bool:
     """L19 — merged-token exact normalized equality with the key, or
     containment in the joined line (invoice_rule_extractor.py:845-862)."""
     needle = normalize_text(key)
-    merged = merge_tokens(line.sorted_items(), max_x_gap=max_x_gap)
+    merged = merge_tokens(line.by_x, max_x_gap=max_x_gap)
     if any(normalize_text(t.text) == needle for t in merged):
         return True
-    return needle in normalize_text(line_text(line, sep=""))
+    return needle in line.norm
 
 
 def _hits_stop_anchor(line: Line, stop_anchors: list[str]) -> bool:
     """L22 — normalized containment of any stop anchor."""
-    text = normalize_text(line_text(line, sep=""))
-    return any(normalize_text(a) in text for a in stop_anchors)
+    return any(normalize_text(a) in line.norm for a in stop_anchors)
 
 
 def _next_effective_is_sum(

@@ -60,34 +60,17 @@ def strip_brackets(s: str) -> str:
 
 
 @lru_cache(maxsize=65536)
-def _normalize_cached(
-    s: str, fullwidth: bool, brackets: bool, whitespace: bool, lowercase: bool
-) -> str:
-    if fullwidth:
-        s = fullwidth_to_halfwidth(s)
-    if brackets:
-        s = strip_brackets(s)
-    if whitespace:
-        s = _WS_RE.sub("", s)
-    if lowercase:
-        s = s.lower()
-    return s
+def _normalize_cached(s: str) -> str:
+    return _WS_RE.sub("", strip_brackets(fullwidth_to_halfwidth(s))).lower()
 
 
-def normalize_text(
-    s: str,
-    *,
-    fullwidth: bool = True,
-    brackets: bool = True,
-    whitespace: bool = True,
-    lowercase: bool = True,
-) -> str:
-    """F1 — ordered normalization chain (order is load-bearing).
+def normalize_text(s: str) -> str:
+    """F1 — fullwidth -> halfwidth, strip brackets, remove whitespace,
+    lowercase (order is load-bearing).
 
     Memoized: anchor keys, header labels and sum keys are re-normalized
-    for every document, and each shared line list is re-scanned once
-    per template (bounded cache — pure function, worker-local)."""
-    return _normalize_cached(s, fullwidth, brackets, whitespace, lowercase)
+    for every document (bounded cache — pure function, worker-local)."""
+    return _normalize_cached(s)
 
 
 # ---------------------------------------------------------------------------

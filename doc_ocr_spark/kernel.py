@@ -19,6 +19,7 @@ from collections.abc import Iterator
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -56,30 +57,9 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
-_ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("url", pa.string()),
-        pa.field("extracted_text", pa.string()),
-        pa.field(
-            "spans",
-            pa.list_(
-                pa.struct(
-                    [
-                        pa.field("field", pa.string()),
-                        pa.field("start", pa.int64()),
-                        pa.field("end", pa.int64()),
-                    ]
-                )
-            ),
-        ),
-        pa.field("template_name", pa.string()),
-        pa.field("complete", pa.bool_()),
-        pa.field("errors", pa.list_(pa.string())),
-        pa.field("fields_json", pa.string()),
-        pa.field("bytes_in", pa.int64()),
-        pa.field("extractor_version", pa.string()),
-    ]
-)
+# the same schema on the Arrow side (url non-null, list children named
+# "element" -- Spark's conversion)
+_ARROW_SCHEMA = to_arrow_schema(OUTPUT_SCHEMA)
 
 # Flush an output batch once this much input has been processed; bounds
 # peak memory for the giant-blob family without splitting any document.

@@ -523,7 +523,7 @@ def minhash_pairs_path(spark: SparkSession, sf_dir: str) -> str:
 
 
 def propagate_min_labels(
-    pairs: DataFrame, max_rounds: int = 30, doubling: bool | None = None
+    pairs: DataFrame, max_rounds: int = 30
 ) -> tuple[DataFrame, int]:
     """Pregel-style min-label propagation to fixpoint over an undirected
     pair graph.  Returns ``(labels(doc_id, cluster_id), n_rounds)``.
@@ -535,17 +535,17 @@ def propagate_min_labels(
     rounds — so simple propagation is the default.  The adversarial
     chain fixture (tests/test_dedup_ops.py) measures ~100% of a
     high-diameter graph's cost as round count x fixed per-round
-    overhead, so ``doubling=True`` adds a pointer-jumping shortcut —
+    overhead, so a pointer-jumping shortcut —
     label(d) = min(label(d), label(label(d))), one extra self-join per
-    round — collapsing the round count from O(diameter) to
-    O(log diameter).  Keep it OFF for
-    clique-shaped dedup graphs: at diameter 1-2 both variants take 2-3
-    rounds and the shortcut join is pure overhead (measured in the
-    fixture; BENCH/BASELINE.md finding #24).  The default
-    (``doubling=None``) is ADAPTIVE: plain rounds first, shortcut
-    switched on automatically past round ``_ADAPT_AFTER`` — cliques
-    never pay the extra join, arbitrary-diameter graphs still fit the
-    round budget (diameter-30 chain test).  Non-convergence raises
+    round — collapses the round count from O(diameter) to
+    O(log diameter).  It stays OFF for the first rounds:
+    clique-shaped dedup graphs converge at diameter 1-2 in 2-3 rounds
+    either way, and there the shortcut join is pure overhead (measured
+    in the fixture; BENCH/BASELINE.md finding #24).  So propagation is
+    ADAPTIVE: plain rounds first, shortcut switched on from round
+    ``_ADAPT_AFTER`` — cliques never pay the extra join,
+    arbitrary-diameter graphs still fit the round budget (diameter-30
+    chain test).  Non-convergence raises
     instead of silently truncating: a truncated propagation would split
     real clusters and let multiple keepers survive dedup.
 
@@ -563,16 +563,6 @@ def propagate_min_labels(
     """
     from pyspark.sql import Observation
 
-    # doubling: True = shortcut from round 0, False = never, None =
-    # ADAPTIVE — plain rounds first (free for the diameter-1-2 clique
-    # graphs real near-dup corpora produce), switch the shortcut on if
-    # convergence drags past _ADAPT_AFTER rounds (evidently a
-    # high-diameter component; from there rounds double their reach, so
-    # any diameter fits the budget).
-    adapt_after: int | None = None
-    if doubling is None:
-        doubling = False
-        adapt_after = _ADAPT_AFTER
     # undirected edge list, cached: every iteration joins against it
     edges = (
         pairs.select("doc_a", "doc_b")
@@ -593,8 +583,6 @@ def propagate_min_labels(
     converged = False
     rounds = 0
     for rnd in range(max_rounds):
-        if adapt_after is not None and rnd == adapt_after:
-            doubling = True
         neigh = (
             edges.join(labels, edges.doc_b == labels.doc_id)
             .groupBy(edges.doc_a.alias("doc_id"))
@@ -609,8 +597,12 @@ def propagate_min_labels(
             F.col("cluster_id").alias("old_cluster_id"),
             new_label.alias("cluster_id"),
         )
-        if doubling:
-            # pointer jumping: follow the label one more step —
+        if rnd >= _ADAPT_AFTER:
+            # plain rounds are free for the diameter-1-2 clique graphs
+            # real near-dup corpora produce; dragging past _ADAPT_AFTER
+            # rounds means a high-diameter component, and from there
+            # rounds double their reach, so any diameter fits the budget.
+            # Pointer jumping: follow the label one more step —
             # cluster_id values are themselves doc_ids in `labels`, so
             # label(label(d)) is an inner self-join on the hop result
             parent = hopped.select(

@@ -21,7 +21,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-CORPUS_COLUMNS = ("url", "warc_ts", "html", "text", "lang")
+# the pages table: parquet corpora, WARC archives and the streaming
+# ingest all read into this schema (DDL, as every reader accepts it)
+PAGES_SCHEMA = (
+    "url string, warc_ts timestamp, html binary, text string, lang string"
+)
 
 
 def _is_iceberg_ref(ref: str) -> bool:

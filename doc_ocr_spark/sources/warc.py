@@ -40,9 +40,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
-PAGES_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
+from doc_ocr_spark.sources.corpus import PAGES_SCHEMA
 
 
 # --------------------------------------------------------------------------

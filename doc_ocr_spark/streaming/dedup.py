@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from doc_ocr_spark.streaming.ingest import PAGES_SCHEMA
+from doc_ocr_spark.sources.corpus import PAGES_SCHEMA
 
 _OUT_SCHEMA = "url STRING, n_bytes BIGINT"
 _STATE_SCHEMA = "seen BOOLEAN"

@@ -19,25 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from doc_ocr_spark.job import extract_bucketed
-
-PAGES_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("warc_ts", TimestampType()),
-        StructField("html", BinaryType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-    ]
-)
+from doc_ocr_spark.sources.corpus import PAGES_SCHEMA
 
 
 # output dirs already checked for the pre-batch_id partition layout

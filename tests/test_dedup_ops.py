@@ -169,20 +169,23 @@ def test_cc_nonconvergence_raises_loudly(spark):
         propagate_min_labels(chain, max_rounds=3)
 
 
-def test_cc_pointer_doubling_same_labels_fewer_rounds(spark):
-    """doubling=True adds the pointer-jumping shortcut:
+def test_cc_pointer_doubling_same_labels_fewer_rounds(spark, monkeypatch):
+    """The pointer-jumping shortcut, on from round 0 (``_ADAPT_AFTER``
+    = 0) against never (``_ADAPT_AFTER`` past the round budget):
     identical fixpoint, O(log diameter) rounds on the chain."""
     import time
 
-    from doc_ocr_spark.operators.dedup import propagate_min_labels
+    from doc_ocr_spark.operators import dedup
 
     chain = spark.createDataFrame(
         [(k, k + 1) for k in range(12)], "doc_a long, doc_b long"
     )
     t0 = time.monotonic()
-    plain, r_plain = propagate_min_labels(chain, doubling=False)
+    monkeypatch.setattr(dedup, "_ADAPT_AFTER", 30)
+    plain, r_plain = dedup.propagate_min_labels(chain, max_rounds=30)
     t1 = time.monotonic()
-    doubled, r_doubled = propagate_min_labels(chain, doubling=True)
+    monkeypatch.setattr(dedup, "_ADAPT_AFTER", 0)
+    doubled, r_doubled = dedup.propagate_min_labels(chain, max_rounds=30)
     t2 = time.monotonic()
     want = {k: 0 for k in range(13)}
     assert {r.doc_id: r.cluster_id for r in plain.collect()} == want
@@ -216,22 +219,25 @@ def test_lang_id_discriminates_latin_script_languages(spark):
     assert got == [g for _, g in samples], list(zip(got, samples))
 
 
-def test_cc_adaptive_doubling_closes_extreme_diameter(spark):
-    """Default (adaptive) mode: a diameter-30 chain — which PLAIN
+def test_cc_adaptive_doubling_closes_extreme_diameter(spark, monkeypatch):
+    """Adaptive propagation: a diameter-30 chain — which PLAIN
     propagation cannot close within the 30-round budget — converges
     because the shortcut switches on automatically after round 5."""
-    from doc_ocr_spark.operators.dedup import propagate_min_labels
+    from doc_ocr_spark.operators import dedup
 
     chain = spark.createDataFrame(
         [(k, k + 1) for k in range(30)], "doc_a long, doc_b long"
     )
-    labels, rounds = propagate_min_labels(chain)  # doubling=None
+    assert dedup._ADAPT_AFTER == 5
+    labels, rounds = dedup.propagate_min_labels(chain)
     got = {r.doc_id: r.cluster_id for r in labels.collect()}
     assert got == {k: 0 for k in range(31)}
     assert rounds < 20, rounds
-    # plain mode genuinely cannot (loud failure, not truncation)
+    # plain rounds only (the switch past the round budget) genuinely
+    # cannot: loud failure, not truncation
+    monkeypatch.setattr(dedup, "_ADAPT_AFTER", 30)
     with pytest.raises(RuntimeError, match="did not converge"):
-        propagate_min_labels(chain, doubling=False)
+        dedup.propagate_min_labels(chain, max_rounds=30)
 
 
 def test_winnow_overflow_guard_raises_loudly(spark, tmp_path):

@@ -1,7 +1,6 @@
 from doc_ocr_spark.core.layout import (
     cluster_lines,
     detect_columns,
-    line_text,
     merge_tokens,
     page_bounds,
     reading_order_lines,
@@ -19,8 +18,8 @@ def test_cluster_lines_groups_by_y():
     toks = [T("a", 0, 0), T("b", 30, 2), T("c", 0, 40), T("d", 30, 41)]
     lines = cluster_lines(toks, y_tol=5.0)
     assert len(lines) == 2
-    assert line_text(lines[0]) == "a b"
-    assert line_text(lines[1]) == "c d"
+    assert lines[0].text == "a b"
+    assert lines[1].text == "c d"
 
 
 def test_cluster_lines_page_break_stops_scan():
@@ -96,4 +95,4 @@ def test_reading_order_left_column_first():
         T("R1", 300, 0, 350), T("R2", 300, 20, 350),
     ]
     lines = reading_order_lines(toks)
-    assert [line_text(l) for l in lines] == ["L1", "L2", "R1", "R2"]
+    assert [l.text for l in lines] == ["L1", "L2", "R1", "R2"]

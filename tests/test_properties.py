@@ -127,7 +127,7 @@ def test_cluster_lines_is_input_order_invariant(spec, seed):
 
     def canon(lines):
         return [
-            (ln.page, ln.y_center, [t.text for t in ln.sorted_items()])
+            (ln.page, ln.y_center, [t.text for t in ln.by_x])
             for ln in lines
         ]
 
