@@ -46,7 +46,7 @@ KERNEL_VERSION = "doc_ocr_spark-0.1.0"
 
 @dataclass
 class ExtractResult:
-    url: str
+    url: str | None
     extracted_text: str = ""
     # (field, start, end) spans into extracted_text
     spans: list[tuple[str, int, int]] = field(default_factory=list)
@@ -194,9 +194,13 @@ def _extract_html(url: str, payload: bytes) -> ExtractResult:
 
 
 def extract_document(
-    url: str, payload: bytes | None, templates: list[dict] | None = None
+    url: str | None, payload: bytes | None, templates: list[dict] | None = None
 ) -> ExtractResult:
-    """The kernel.  ``templates`` defaults to the built-in set."""
+    """The kernel.  ``templates`` defaults to the built-in set.  A page
+    without a url has no identity to key its output on; it comes back as
+    an error row (errors are data), not extracted."""
+    if url is None:
+        return ExtractResult(url=None, errors=["missing_url"])
     if templates is None:
         from doc_ocr_spark.core.builtin_templates import builtin_templates
 

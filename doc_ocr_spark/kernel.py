@@ -33,7 +33,7 @@ from doc_ocr_spark.core.extractor import KERNEL_VERSION, extract_document
 
 OUTPUT_SCHEMA = StructType(
     [
-        StructField("url", StringType(), False),
+        StructField("url", StringType(), True),
         StructField("extracted_text", StringType(), True),
         StructField(
             "spans",
@@ -57,8 +57,8 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
-# the same schema on the Arrow side (url non-null, list children named
-# "element" -- Spark's conversion)
+# the same schema on the Arrow side (list children named "element" --
+# Spark's conversion)
 _ARROW_SCHEMA = to_arrow_schema(OUTPUT_SCHEMA)
 
 # Flush an output batch once this much input has been processed; bounds

@@ -33,3 +33,18 @@ def test_small_inputs_single_batch():
     out = list(kernel(iter([_batch(rows)])))
     assert len(out) == 1
     assert out[0].num_rows == 10
+
+
+def test_null_url_row_is_error_data(spark):
+    """A page without a url comes back as a ``missing_url`` error row;
+    the task does not fail on a null in a non-null output column."""
+    from doc_ocr_spark.kernel import apply_kernel
+
+    df = spark.createDataFrame(
+        [(None, b"<p>hello world</p>"), ("u2", b"<p>x</p>")],
+        "url string, html binary",
+    )
+    rows = {r.url: r for r in apply_kernel(df).collect()}
+    assert set(rows) == {None, "u2"}
+    assert list(rows[None].errors) == ["missing_url"]
+    assert "missing_url" not in rows["u2"].errors

@@ -195,10 +195,12 @@ def test_repetition_stats_is_map_only(spark):
 
 
 def test_nn_bucket_self_join_reuses_assignment(spark):
-    """ann_nn_within_bucket's probe and index sides must filter one
-    shared IVF assignment subtree (centroid sims + ranking window), so
-    the assignment executes once for both cogroup inputs: the final
-    adaptive plan must contain a ReusedExchange."""
+    """ann_nn_within_bucket's probe and index sides read the same
+    broadcasts (the ``emb`` table and the staged centroids), so the
+    executed adaptive plan must contain a ReusedExchange.  It does not
+    pin the IVF assignment to one execution: Spark puts a WindowGroupLimit
+    under each side's rank filter (4 for the probe, 1 for the index), so
+    each side computes its own centroid sims and ranking shuffle."""
     from doc_ocr_spark.operators.similarity import ann_nn_within_bucket
 
     df = ann_nn_within_bucket(spark, "/root/testdata/sf0.001")
