@@ -8,6 +8,7 @@ byte-identity between golden and distributed output is structural.
 from __future__ import annotations
 
 import json
+from collections import Counter
 
 from doc_ocr_spark.core.extractor import extract_document
 from doc_ocr_spark.datagen import generate_pages
@@ -53,12 +54,19 @@ def _canon(row: dict) -> str:
     )
 
 
-def compare_to_golden(spark_rows: list[dict], golden: list[dict]) -> list[str]:
-    """Full-outer comparison by url; returns list of mismatched urls
-    (empty == byte-identical)."""
-    g = {r["url"]: _canon(r) for r in golden}
-    s = {r["url"]: _canon(r) for r in spark_rows}
-    bad = sorted(
-        set(g) ^ set(s) | {u for u in set(g) & set(s) if g[u] != s[u]}
-    )
-    return bad
+def _by_url(rows: list[dict]) -> dict:
+    """url -> multiset of canonical rows (a null url is one key like any
+    other; rows sharing a url are all kept)."""
+    out: dict = {}
+    for r in rows:
+        out.setdefault(r["url"], Counter())[_canon(r)] += 1
+    return out
+
+
+def compare_to_golden(spark_rows: list[dict], golden: list[dict]) -> list:
+    """Full-outer comparison by url; returns the urls whose multisets of
+    rows differ (empty == byte-identical), sorted with a null url
+    first."""
+    g, s = _by_url(golden), _by_url(spark_rows)
+    bad = {u for u in g.keys() | s.keys() if g.get(u) != s.get(u)}
+    return sorted(bad, key=lambda u: (u is not None, u or ""))

@@ -731,36 +731,10 @@ FROM comp c JOIN keep k USING (cluster_id)
 SPAN_WORDS = 8  # window width; docs shorter than this have no spans
 
 
-def _spans(docs: DataFrame, width: int = SPAN_WORDS) -> DataFrame:
-    """Distinct hashed ``width``-word windows (stride 1) per doc:
-    (doc_id, s).  Same key discipline as :func:`_shingles`."""
-    docs = respread(docs)  # finding #36
-    w = F.split(F.col("text"), " ")
-    window_text = F.concat_ws(
-        " ", *[F.element_at("w", F.col("i") + k) for k in range(width)]
-    )
-    return (
-        docs.select("doc_id", w.alias("w"))
-        .filter(F.size("w") >= width)
-        .select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(1), F.size("w") - width + 1)).alias("i"),
-            "w",
-        )
-        .select(
-            "doc_id",
-            _hex_to_long(
-                F.substring(F.md5(window_text), 1, SHINGLE_HASH_CHARS)
-            ).alias("s"),
-        )
-        .distinct()
-    )
-
-
 def _spans_pos(docs: DataFrame, width: int = SPAN_WORDS) -> DataFrame:
-    """ALL hashed ``width``-word windows with their 1-based start
-    position: (doc_id, i, s) — the position-carrying twin of
-    :func:`_spans` for consumers that rewrite text."""
+    """ALL hashed ``width``-word windows (stride 1) with their 1-based
+    start position: (doc_id, i, s).  Same key discipline as
+    :func:`_shingles`."""
     docs = respread(docs)  # finding #36
     w = F.split(F.col("text"), " ")
     window_text = F.concat_ws(
@@ -782,6 +756,12 @@ def _spans_pos(docs: DataFrame, width: int = SPAN_WORDS) -> DataFrame:
             ).alias("s"),
         )
     )
+
+
+def _spans(docs: DataFrame, width: int = SPAN_WORDS) -> DataFrame:
+    """Distinct hashed ``width``-word windows per doc: (doc_id, s) —
+    :func:`_spans_pos` without the positions."""
+    return _spans_pos(docs, width).select("doc_id", "s").distinct()
 
 
 def dup_span_flags(spark: SparkSession, sf_dir: str) -> DataFrame:

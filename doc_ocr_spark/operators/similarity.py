@@ -16,8 +16,12 @@ Plan shape:
   nested loop over the k centroid arrays (map-only, the classic
   k-means-on-MapReduce shape).
 - The BIG within-bucket pair work (``ann_nn_within_bucket``,
-  ``embedding_cosine_dedup``) runs in grouped NumPy kernels that return
-  shortlists with EXACT scaled-long dots (see the kernel headers).
+  ``embedding_cosine_dedup``) runs in grouped NumPy kernels that share
+  one exact-shortlist loop (``_exact_shortlist``: blocked GEMM, a keep
+  rule, then EXACT scaled-long dots for the kept pairs only).
+  ``ann_nn_within_bucket`` runs its IVF assignment once: each ranked
+  row carries whether it is the vector's primary bucket, so one bucket
+  exchange feeds both the probe and the index side.
 
 - ``ann_cosine_topk``   brute-force cosine top-k (the correctness
   baseline; O(q x n), broadcast the query set)
@@ -353,88 +357,93 @@ def _refined_ranked(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFra
     )
 
 
-# The within-bucket NN pair work runs in a cogrouped NumPy kernel.  A
-# JVM pair join pays ~8-10 us per candidate pair (OPTIMIZATION_r06.md)
-# because every pair materializes a row carrying BOTH embeddings; the
-# kernel ships each bucket's vectors ONCE through one exchange, forms
-# the pair products inside NumPy, and returns only a per-(query,
-# bucket) SHORTLIST of nearest-neighbour candidates with their EXACT
-# scaled-long dots; the sim division, 6-dp rounding and the global
-# argmax stay in JVM expressions.
+# The within-bucket pair work of ann_nn_within_bucket and
+# embedding_cosine_dedup runs in grouped NumPy kernels.  A JVM pair
+# join pays ~8-10 us per candidate pair (OPTIMIZATION_r06.md) because
+# every pair materializes a row carrying BOTH embeddings; a kernel
+# ships each group's vectors ONCE through one exchange, forms the pair
+# products inside NumPy, and returns only a SHORTLIST of candidate
+# pairs with their EXACT scaled-long dots; the sim division, 6-dp
+# rounding and the final filter or argmax stay in JVM expressions.
 #
-# Exactness: the kernel preselects by an approximate float64 GEMM sim
-# with margin _NN_MARGIN, then recomputes floor((x*y)*1e12) as int64
-# per element for the shortlist — the same IEEE ops in the same order
-# as _dot_scaled and the DuckDB oracle, so the returned dots are
-# bit-exact.  The margin only has to cover (a) two exact sims rounding
-# to the same 6-dp value (<~2e-6 apart) and (b) GEMM-vs-exact drift
-# (<~1e-9); 1e-4 is ~50x conservative, so the true argmax row is always
-# shortlisted and extra rows are inert under the total-ordered argmax.
+# Exactness (_exact_shortlist): the kernel preselects by an approximate
+# float64 GEMM sim with margin _NN_MARGIN, then recomputes
+# floor((x*y)*1e12) as int64 per element for the shortlist — the same
+# IEEE ops in the same order as _dot_scaled and the DuckDB oracle, so
+# the returned dots are bit-exact.  The margin only has to cover (a)
+# two exact sims rounding to the same 6-dp value (<~2e-6 apart) and (b)
+# GEMM-vs-exact drift (<~1e-9); 1e-4 is ~50x conservative, so every
+# pair the JVM side can select is shortlisted, and extra rows are inert
+# under its total-ordered argmax or its exact >= tau filter.
 _NN_MARGIN = 1e-4
-# Cells per GEMM block in both kernels: rows are blocked so that each
-# float64 sims buffer holds max(_GEMM_CELLS, |bucket|) cells (128 MiB
-# up to 16M-vector buckets), not a fixed row count times |bucket|.
+# Cells per GEMM block: probe rows are blocked so that each float64
+# sims buffer holds max(_GEMM_CELLS, |index|) cells (128 MiB up to
+# 16M-vector buckets), not a fixed row count times |index|.
 _GEMM_CELLS = 1 << 24
 
 
-def _nn_shortlist_kernel(key, probe, index):
-    """Per-bucket NN shortlist: (qid, bucket, cid, dot, qn, cn) rows
-    for every candidate within _NN_MARGIN of its query's best bucket
-    sim.  ``dot`` is the exact scaled-long dot (see module header)."""
+def _exact_shortlist(grp, index, keep):
+    """(qid, cid, dot, qn, cn) for the (probe, index) pairs of one
+    group that ``keep`` selects, with exact scaled-long dots.  The
+    probe rows are all of ``grp`` (vec_id, embedding, nrm); the index
+    rows are ``grp[index]`` (a boolean mask, or ``slice(None)`` for
+    all).  ``keep(approx, qv, cv)`` maps a block of approximate sims
+    (probe ids ``qv`` x index ids ``cv``) to a boolean mask."""
     import numpy as np
     import pandas as pd
 
-    def empty():
-        return pd.DataFrame(
-            {
-                "qid": np.empty(0, np.int64),
-                "bucket": np.empty(0, np.int64),
-                "cid": np.empty(0, np.int64),
-                "dot": np.empty(0, np.int64),
-                "qn": np.empty(0, np.float64),
-                "cn": np.empty(0, np.float64),
-            }
-        )
-
-    if len(probe) == 0 or len(index) == 0:
-        return empty()
-    Q = np.stack(probe["embedding"].to_numpy()).astype(np.float64)
-    C = np.stack(index["embedding"].to_numpy()).astype(np.float64)
-    qn = probe["nrm"].to_numpy(dtype=np.float64)
-    cn = index["nrm"].to_numpy(dtype=np.float64)
-    qv = probe["vec_id"].to_numpy(dtype=np.int64)
-    cv = index["vec_id"].to_numpy(dtype=np.int64)
-    outs = []
-    block = max(1, _GEMM_CELLS // len(C))
-    for b0 in range(0, len(Q), block):
-        b1 = min(b0 + block, len(Q))
-        approx = (Q[b0:b1] @ C.T) / qn[b0:b1, None] / cn[None, :]
-        approx[qv[b0:b1, None] == cv[None, :]] = -np.inf  # no self-pairs
-        best = approx.max(axis=1)
-        keep = approx >= (best[:, None] - _NN_MARGIN)
-        keep &= np.isfinite(approx)
-        qi, ci = np.nonzero(keep)
-        if len(qi) == 0:
-            continue
+    if len(grp):
+        E = np.stack(grp["embedding"].to_numpy()).astype(np.float64)
+    else:
+        E = np.empty((0, DIM))
+    nr = grp["nrm"].to_numpy(dtype=np.float64)
+    vid = grp["vec_id"].to_numpy(dtype=np.int64)
+    C, cn, cv = E[index], nr[index], vid[index]
+    none = np.empty(0, np.int64)
+    qs, cs, dots = [none], [none], [none]
+    block = max(1, _GEMM_CELLS // max(1, len(C)))
+    for b0 in range(0, len(E) if len(C) else 0, block):
+        b1 = min(b0 + block, len(E))
+        approx = (E[b0:b1] @ C.T) / nr[b0:b1, None] / cn[None, :]
+        qi, ci = np.nonzero(keep(approx, vid[b0:b1], cv))
+        qi += b0
         # exact scaled-long dot, same op order as _dot_scaled:
         # (float64(x) * float64(y)) * 1e12, floor, int64, sum
-        prod = Q[b0 + qi] * C[ci]
-        dot = np.floor(prod * _S).astype(np.int64).sum(axis=1)
-        outs.append(
-            pd.DataFrame(
-                {
-                    "qid": qv[b0 + qi],
-                    "bucket": np.full(len(qi), int(key[0]), np.int64),
-                    "cid": cv[ci],
-                    "dot": dot,
-                    "qn": qn[b0 + qi],
-                    "cn": cn[ci],
-                }
-            )
-        )
-    if not outs:
-        return empty()
-    return pd.concat(outs, ignore_index=True)
+        prod = E[qi] * C[ci]
+        qs.append(qi)
+        cs.append(ci)
+        dots.append(np.floor(prod * _S).astype(np.int64).sum(axis=1))
+    qi, ci = np.concatenate(qs), np.concatenate(cs)
+    return pd.DataFrame(
+        {
+            "qid": vid[qi],
+            "cid": cv[ci],
+            "dot": np.concatenate(dots),
+            "qn": nr[qi],
+            "cn": cn[ci],
+        }
+    )
+
+
+def _keep_near_best(approx, qv, cv):
+    """NN rule: every non-self candidate within _NN_MARGIN of its
+    probe's best approximate sim."""
+    import numpy as np
+
+    approx[qv[:, None] == cv[None, :]] = -np.inf  # no self-pairs
+    best = approx.max(axis=1)
+    return (approx >= best[:, None] - _NN_MARGIN) & np.isfinite(approx)
+
+
+def _nn_shortlist_kernel(key, grp):
+    """Per-bucket NN shortlist: (qid, bucket, cid, dot, qn, cn) rows
+    for every candidate within _NN_MARGIN of its query's best bucket
+    sim.  Every row of the bucket probes; the ``primary`` rows (the
+    vectors whose top-1 bucket this is) are the index."""
+    primary = grp["primary"].to_numpy(dtype=bool)
+    out = _exact_shortlist(grp, primary, _keep_near_best)
+    out.insert(1, "bucket", int(key[0]))
+    return out
 
 
 def ann_nn_within_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -446,28 +455,17 @@ def ann_nn_within_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb_with_norms(spark, sf_dir)
     # the query side probes its top-N_PROBE buckets, the index side
     # keeps its primary bucket only, so a (q, c) pair matches through
-    # at most ONE bucket.  Both sides filter one ranked subtree, but
-    # Spark infers a different WindowGroupLimit under each filter
-    # (N_PROBE vs 1), so the centroid-sims leg and its shuffle run once
-    # per side; only the emb and centroid broadcasts are reused.  The
-    # index filter is ``rank <= 1``, as in the oracle: ``rank = 1``
-    # plans the same operators, but AQE then creates the index-side
-    # shuffle stage first, and the query took 2% and 7% longer
-    # (medians of two 12-run same-session A/Bs at sf0.01, 4 cores).
-    ranked = _refined_ranked(spark, sf_dir, emb)
-    withb = emb.join(ranked.select("vec_id", "bucket"), "vec_id")
-    cand = emb.join(
-        ranked.filter(F.col("rank") <= 1).select("vec_id", "bucket"), "vec_id"
+    # at most ONE bucket.  One assignment serves both sides: each
+    # ranked row carries ``primary`` (rank 1 is within the top
+    # N_PROBE, so every index row of a bucket is also one of its probe
+    # rows), and one bucket exchange feeds the kernel.
+    ranked = _refined_ranked(spark, sf_dir, emb).select(
+        "vec_id", "bucket", (F.col("rank") == 1).alias("primary")
     )
-    pcols = ["vec_id", "bucket", "embedding", "nrm"]
-    # re-alias each side's columns (fresh exprIds) — withb and cand
-    # share lineage, and cogroup's column resolution rejects the
-    # ambiguous self-reference otherwise
-    probe_side = withb.select([F.col(c).alias(c) for c in pcols])
-    index_side = cand.select([F.col(c).alias(c) for c in pcols])
     shortlist = (
-        probe_side.groupby("bucket")
-        .cogroup(index_side.groupby("bucket"))
+        emb.select("vec_id", "embedding", "nrm")
+        .join(ranked, "vec_id")
+        .groupby("bucket")
         .applyInPandas(
             _nn_shortlist_kernel,
             "qid long, bucket long, cid long, dot long, "
@@ -623,13 +621,13 @@ _SIGNS = _hyperplane_signs(N_PLANES * N_BANDS)
 # embedding_cosine_dedup's banded-LSH pair work follows the same
 # NumPy-kernel discipline as ann_nn_within_bucket.  The kernels compute
 # bucket bits exactly in NumPy (int64 floor sums — the oracle's
-# scaled-long sign test), group by (band, bucket), form the
-# within-bucket upper-triangle products in blocked GEMM, and emit only
-# pairs whose approximate sim clears DEDUP_TAU - _NN_MARGIN with their
-# EXACT scaled-long dots; the 6-dp rounding and the >= tau filter stay
-# in JVM expressions, so a pair the kernel drops (sim <= tau - 1e-4 +
-# ~1e-9 GEMM drift) can never round back up to tau, and emitted pairs
-# carry bit-exact dots.  Multi-band duplicates collapse in a DISTINCT
+# scaled-long sign test), group by (band, bucket), and run the shared
+# _exact_shortlist over the within-bucket upper triangle, which emits
+# only pairs whose approximate sim clears DEDUP_TAU - _NN_MARGIN with
+# their EXACT scaled-long dots; the 6-dp rounding and the >= tau
+# filter stay in JVM expressions, so a pair the kernel drops (sim <=
+# tau - 1e-4 + ~1e-9 GEMM drift) can never round back up to tau, and
+# emitted pairs carry bit-exact dots.  Multi-band duplicates collapse in a DISTINCT
 # over the (deterministic) shortlist rows, as the oracle's candidate
 # DISTINCT does.
 def _make_band_buckets_kernel(n_bands: int, n_planes: int, signs):
@@ -677,67 +675,17 @@ def _make_band_buckets_kernel(n_bands: int, n_planes: int, signs):
     return kernel
 
 
-def _make_band_pair_kernel(tau: float, margin: float):
-    """applyInPandas factory (closure-captured knobs, see
-    _make_band_buckets_kernel): per-(band, bucket) upper-triangle
-    near-dup shortlist (qid, cid, dot, qn, cn) for pairs with
-    approximate sim >= tau - margin; ``dot`` is the exact scaled-long
-    dot."""
-
-    def kernel(key, grp):
-        return _band_pair_shortlist(grp, tau, margin)
-
-    return kernel
+def _keep_upper_near_tau(approx, qv, cv):
+    """Band rule: upper-triangle pairs whose approximate sim clears
+    DEDUP_TAU - _NN_MARGIN."""
+    return (qv[:, None] < cv[None, :]) & (approx >= DEDUP_TAU - _NN_MARGIN)
 
 
-def _band_pair_shortlist(grp, tau, margin):
-    import numpy as np
-    import pandas as pd
-
-    def empty():
-        return pd.DataFrame(
-            {
-                "qid": np.empty(0, np.int64),
-                "cid": np.empty(0, np.int64),
-                "dot": np.empty(0, np.int64),
-                "qn": np.empty(0, np.float64),
-                "cn": np.empty(0, np.float64),
-            }
-        )
-
-    n = len(grp)
-    if n < 2:
-        return empty()
-    E = np.stack(grp["embedding"].to_numpy()).astype(np.float64)
-    nr = grp["nrm"].to_numpy(dtype=np.float64)
-    vid = grp["vec_id"].to_numpy(dtype=np.int64)
-    outs = []
-    block = max(1, _GEMM_CELLS // n)
-    for b0 in range(0, n, block):
-        b1 = min(b0 + block, n)
-        approx = (E[b0:b1] @ E.T) / nr[b0:b1, None] / nr[None, :]
-        mask = (vid[b0:b1, None] < vid[None, :]) & (
-            approx >= tau - margin
-        )
-        qi, ci = np.nonzero(mask)
-        if len(qi) == 0:
-            continue
-        prod = E[b0 + qi] * E[ci]
-        dot = np.floor(prod * _S).astype(np.int64).sum(axis=1)
-        outs.append(
-            pd.DataFrame(
-                {
-                    "qid": vid[b0 + qi],
-                    "cid": vid[ci],
-                    "dot": dot,
-                    "qn": nr[b0 + qi],
-                    "cn": nr[ci],
-                }
-            )
-        )
-    if not outs:
-        return empty()
-    return pd.concat(outs, ignore_index=True)
+def _band_shortlist_kernel(key, grp):
+    """Per-(band, bucket) near-dup shortlist (qid, cid, dot, qn, cn):
+    the upper-triangle pairs within DEDUP_TAU - _NN_MARGIN, with exact
+    scaled-long dots."""
+    return _exact_shortlist(grp, slice(None), _keep_upper_near_tau)
 
 
 def embedding_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -761,8 +709,8 @@ def embedding_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     to feed the cores (embedding dots are light per byte next to the
     text family's md5 work).  ann_nn_within_bucket got the same A/B
     and REGRESSED 29.5 -> 105.6 s at sf1eq (its cost is the bucket
-    pair join, and redistributing the raw vectors de-aligns the
-    reused ranked subtree), so it stays on the scan layout."""
+    pair work, not the dots; the A/B predates its single-assignment
+    form and was not repeated), so it stays on the scan layout."""
     from doc_ocr_spark.operators import respread
 
     emb = respread(_emb_with_norms(spark, sf_dir), min_bytes=2 << 20)
@@ -774,7 +722,7 @@ def embedding_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist = (
         withb.groupby("band", "bucket")
         .applyInPandas(
-            _make_band_pair_kernel(DEDUP_TAU, _NN_MARGIN),
+            _band_shortlist_kernel,
             "qid long, cid long, dot long, qn double, cn double",
         )
         .distinct()

@@ -502,14 +502,14 @@ def _clustered(n, n_bases, seed):
 
 
 def _nn_bucket():
-    """One bucket's (probe, index) sides.  Probe 100..109 are also
-    index rows (self-pairs to skip); probe 336..339 copy index
-    136..139 under other ids; index 140 and 141 both copy probe 345,
-    an exact tie that the argmax resolves to the smaller cid.  For
-    probe 346, index 142 is its double (sim 1) and index 99 a nudged
-    copy whose sim also rounds to 1.000000 but is ~1e-7 lower in the
-    GEMM: the argmax is 99, so the shortlist must reach below the
-    best approximate sim."""
+    """One bucket as the NN kernel receives it: every row probes, and
+    the ``primary`` rows (99..142) are the index, so each of them must
+    skip itself.  Probe 336..339 copy index 136..139 under other ids;
+    index 140 and 141 both copy probe 345, an exact tie that the argmax
+    resolves to the smaller cid.  For probe 346, index 142 is its
+    double (sim 1) and index 99 a nudged copy whose sim also rounds to
+    1.000000 but is ~1e-7 lower in the GEMM: the argmax is 99, so the
+    shortlist must reach below the best approximate sim."""
     v = _clustered(50, 4, seed=11)
     nudged = v[46].copy()
     nudged[0] += 0.005
@@ -517,22 +517,24 @@ def _nn_bucket():
         [99] + list(range(100, 143)),
         [nudged] + list(v[:40]) + [v[45], v[45], 2 * v[46]],
     )
-    probe = _vec_frame(
-        list(range(100, 110)) + list(range(336, 350)),
-        list(v[:10]) + list(v[36:50]),
+    probe = _vec_frame(range(336, 350), v[36:50])
+    return pd.concat(
+        [index.assign(primary=True), probe.assign(primary=False)],
+        ignore_index=True,
     )
-    return probe, index
 
 
 def test_nn_shortlist_kernel_exact_dots_and_argmax():
-    probe, index = _nn_bucket()
-    out = S._nn_shortlist_kernel((7,), probe, index)
+    grp = _nn_bucket()
+    out = S._nn_shortlist_kernel((7,), grp)
     assert (out["bucket"] == 7).all()
     assert (out["qid"] != out["cid"]).all()
+    index = grp[grp["primary"]]
+    assert set(out["cid"]) <= set(index["vec_id"])
     cands = list(zip(index["vec_id"], index["embedding"], index["nrm"]))
     emb = dict(zip(index["vec_id"], index["embedding"]))
     ties = 0
-    for qid, qe, qn in zip(probe["vec_id"], probe["embedding"], probe["nrm"]):
+    for qid, qe, qn in zip(grp["vec_id"], grp["embedding"], grp["nrm"]):
         sims = {c: _ref_sim(qe, ce, qn, cn) for c, ce, cn in cands if c != qid}
         best = max(sims.values())
         tied = {c for c, s in sims.items() if s == best}
@@ -550,19 +552,20 @@ def test_nn_shortlist_kernel_exact_dots_and_argmax():
 
 
 def test_similarity_kernels_empty_inputs():
-    probe, index = _nn_bucket()
+    grp = _nn_bucket()
     cols = ["qid", "bucket", "cid", "dot", "qn", "cn"]
-    for p, i in ((probe.iloc[:0], index), (probe, index.iloc[:0])):
-        out = S._nn_shortlist_kernel((7,), p, i)
+    for g in (grp.iloc[:0], grp.assign(primary=False)):
+        out = S._nn_shortlist_kernel((7,), g)
         assert list(out.columns) == cols and len(out) == 0
         assert str(out["dot"].dtype) == "int64"
+        assert str(out["bucket"].dtype) == "int64"
     for n in (0, 1):
-        out = S._band_pair_shortlist(index.iloc[:n], S.DEDUP_TAU, S._NN_MARGIN)
+        out = S._band_shortlist_kernel((0, 0), grp.iloc[:n])
         assert list(out.columns) == ["qid", "cid", "dot", "qn", "cn"]
         assert len(out) == 0
     signs = S._hyperplane_signs(2 * S.N_PLANES)
     kern = S._make_band_buckets_kernel(2, S.N_PLANES, signs)
-    assert list(kern(iter([index.iloc[:0]]))) == []
+    assert list(kern(iter([grp.iloc[:0]]))) == []
 
 
 @pytest.mark.parametrize("n_bands", [1, 4])
@@ -592,9 +595,11 @@ def test_band_kernels_match_bruteforce(n_bands):
     )
     assert len(buckets) == len(want_bucket) and got_bucket == want_bucket
 
-    pair_kernel = S._make_band_pair_kernel(S.DEDUP_TAU, S._NN_MARGIN)
     short = pd.concat(
-        [pair_kernel(k, g) for k, g in buckets.groupby(["band", "bucket"])],
+        [
+            S._band_shortlist_kernel(k, g)
+            for k, g in buckets.groupby(["band", "bucket"])
+        ],
         ignore_index=True,
     )
     assert (short["qid"] < short["cid"]).all()
@@ -620,17 +625,15 @@ def test_band_kernels_match_bruteforce(n_bands):
 
 
 def test_similarity_kernels_same_output_in_small_blocks(monkeypatch):
-    probe, index = _nn_bucket()
+    grp = _nn_bucket()
     frame = _vec_frame(range(60), _clustered(60, 6, seed=5))
-    nn = S._nn_shortlist_kernel((3,), probe, index)
-    band = S._band_pair_shortlist(frame, S.DEDUP_TAU, S._NN_MARGIN)
+    nn = S._nn_shortlist_kernel((3,), grp)
+    band = S._band_shortlist_kernel((0, 0), frame)
     assert len(nn) > 0 and len(band) > 0
     # a few rows per block, then 1 (a bucket wider than the cell budget)
-    for cells in (3 * len(index), 1):
+    for cells in (3 * int(grp["primary"].sum()), 1):
         monkeypatch.setattr(S, "_GEMM_CELLS", cells)
+        pd.testing.assert_frame_equal(S._nn_shortlist_kernel((3,), grp), nn)
         pd.testing.assert_frame_equal(
-            S._nn_shortlist_kernel((3,), probe, index), nn
-        )
-        pd.testing.assert_frame_equal(
-            S._band_pair_shortlist(frame, S.DEDUP_TAU, S._NN_MARGIN), band
+            S._band_shortlist_kernel((0, 0), frame), band
         )

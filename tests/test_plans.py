@@ -194,19 +194,20 @@ def test_repetition_stats_is_map_only(spark):
     assert "Window" not in plan and "Join" not in plan, plan
 
 
-def test_nn_bucket_self_join_reuses_assignment(spark):
-    """ann_nn_within_bucket's probe and index sides read the same
-    broadcasts (the ``emb`` table and the staged centroids), so the
-    executed adaptive plan must contain a ReusedExchange.  It does not
-    pin the IVF assignment to one execution: Spark puts a WindowGroupLimit
-    under each side's rank filter (4 for the probe, 1 for the index), so
-    each side computes its own centroid sims and ranking shuffle."""
+def test_nn_bucket_assigns_once_without_cogroup(spark):
+    """ann_nn_within_bucket's probe and index sides come from ONE IVF
+    assignment: the executed adaptive plan ranks the centroid sims in
+    one Window over one crossJoin leg, and one grouped kernel reads one
+    bucket exchange (no cogroup of two copies of the assignment)."""
     from doc_ocr_spark.operators.similarity import ann_nn_within_bucket
 
     df = ann_nn_within_bucket(spark, "/root/testdata/sf0.001")
     df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in plan, plan
+    plan = df._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
+    assert plan.count("Window [") == 1, plan
+    assert plan.count("BroadcastNestedLoopJoin") == 1, plan
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
 
 
 def test_domain_quota_partial_window_limit(spark):

@@ -31,6 +31,27 @@ def test_kernel_matches_golden_bytewise(spark, corpus_path):
     assert compare_to_golden(out, golden) == []
 
 
+def test_compare_to_golden_keeps_null_url_rows_apart():
+    """A null url (a ``missing_url`` row) sorts before string urls
+    instead of raising, and rows that share a url are compared as a
+    multiset, so two different null-url rows are two rows, not one."""
+
+    def row(url, text):
+        return {
+            "url": url, "extracted_text": text, "spans": [],
+            "template_name": None, "complete": False,
+            "errors": ["missing_url"] if url is None else [],
+            "fields_json": "{}",
+        }
+
+    a, b, c = row(None, "a"), row(None, "b"), row("u2", "x")
+    assert compare_to_golden([a, b, c], [c, b, a]) == []
+    assert compare_to_golden([a, c], [a, b, c]) == [None]
+    assert compare_to_golden([a, a, c], [a, b, c]) == [None]
+    assert compare_to_golden([a, row("u2", "y")], [a, b, c]) == [None, "u2"]
+    assert compare_to_golden([a, b, c], [a, b]) == ["u2"]
+
+
 def test_kernel_partitioning_invariance(spark, corpus_path):
     """Same result regardless of partition count / input order
     (SURVEY.md §5.2.4 determinism gate)."""
